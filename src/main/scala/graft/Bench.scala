@@ -30,6 +30,17 @@ import org.apache.spark.sql.SparkSession
   * BENCH_LOCAL.json in the repo for human reading.
   */
 object Bench {
+
+  /** The slowest-first prefix of `entries` whose comma-separated
+    * length (one separator per entry) fits `budget`. Packing stops at
+    * the first entry that does not fit — a later, shorter one never
+    * slips in — so the shown entries are exactly the top `size`, which
+    * `omitted_sec` relies on. */
+  private[graft] def packTail(entries: Seq[String], budget: Int): Seq[String] = {
+    val ends = entries.scanLeft(0)(_ + _.length + 1).tail
+    entries.take(ends.takeWhile(_ <= budget).length)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -208,9 +219,7 @@ object Bench {
     // ~1900 chars so the driver's 2000-char capture can never truncate it
     val reserve = 48 + sfDir.length
     val budget = 1900 - head.length - reserve
-    val shown = scala.collection.mutable.ArrayBuffer[String]()
-    var used = 0
-    for (e <- byTime if used + e.length + 1 <= budget) { shown += e; used += e.length + 1 }
+    val shown = packTail(byTime, budget)
     val shownTotal = ordered.sortBy { case (k, v) => (-v, k) }
       .take(shown.size).map(_._2).sum
     println(head + shown.mkString(",") +

@@ -70,6 +70,38 @@ object SparkEntry {
     EventTime.normalize(t(spark, dir, "events"))
   }
 
+  /** The torch queries' token-id column: `text`'s [[Tok.Pattern]]
+    * tokens (the first `maxLen`; `maxLen <= 0` keeps them all), each
+    * hashed to `md5[0:8] mod vocab` — the oracles' `tokens` CTE. */
+  private def tokIds(text: Column, vocab: Int, maxLen: Int = 0): Column = {
+    val words = call_function("regexp_extract_all", text, lit(Tok.Pattern), lit(0))
+    transform(if (maxLen > 0) slice(words, 1, maxLen) else words, tokHash(_, vocab))
+  }
+
+  private def tokHash(tk: Column, vocab: Int): Column =
+    conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab
+
+  /** The torch queries' prompt table: `documents` → (`doc_id`,
+    * `tok_ids` = [[tokIds]]), documents without a token dropped. */
+  private def docToks(s: SparkSession, dir: String, vocab: Int,
+      maxLen: Int = EncMaxLen): DataFrame =
+    t(s, dir, "documents")
+      .select(col("doc_id"), tokIds(col("text"), vocab, maxLen).as("tok_ids"))
+      .filter(size(col("tok_ids")) >= 1)
+
+  /** The encoder-decoder queries' prompt table: `documents` →
+    * (`doc_id`, `d_ids` = the first 2 tokens hashed mod `dvocab`,
+    * `s_ids` = the first [[EncMaxLen]] hashed mod `kvocab`), documents
+    * without a token dropped. */
+  private def pairToks(s: SparkSession, dir: String, dvocab: Int, kvocab: Int): DataFrame =
+    t(s, dir, "documents")
+      .select(col("doc_id"),
+        call_function("regexp_extract_all", col("text"), lit(Tok.Pattern), lit(0)).as("words"))
+      .filter(size(col("words")) >= 1)
+      .select(col("doc_id"),
+        transform(slice(col("words"), 1, 2), tokHash(_, dvocab)).as("d_ids"),
+        transform(slice(col("words"), 1, EncMaxLen), tokHash(_, kvocab)).as("s_ids"))
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q06_join_agg_revenue")(spark, "/root/testdata/sf0.001")
@@ -1029,11 +1061,7 @@ object SparkEntry {
       val vocab = genModel.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(genModel)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(genModel, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       val drafted = Torch.generateGreedy(toks, "tok_ids", "draft", bcD,
         steps = 2, batchSize = 256)
       val withSeqs = drafted
@@ -1070,11 +1098,7 @@ object SparkEntry {
       val vocab = fp.seqHead.get.vocab
       val bcF = s.sparkContext.broadcast(fp)
       val bcQ = s.sparkContext.broadcast(qz)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       val f = Torch.inferBatched(toks, "tok_ids", "fp_logits", bcF, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("fp_logits")).as("fp_class"))
@@ -1100,11 +1124,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.beamSearch(toks, "tok_ids", "beams", bc,
           steps = 2, width = 2, batchSize = 256,
           lengthPenalty = 0.5, eosId = 1)
@@ -1127,11 +1147,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.beamSearch(toks, "tok_ids", "beams", bc,
           steps = 2, width = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -1175,11 +1191,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3,
           batchSize = 256, repetitionPenalty = 1.25, noRepeatNgram = 2)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -1200,11 +1212,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3,
           batchSize = 256,
           bannedPhrases = Seq(Seq(4, 4), Seq(0, 4), Seq(1, 1, 1)))
@@ -1222,11 +1230,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3,
           batchSize = 256, banned = Set(1, 4))
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -1247,11 +1251,7 @@ object SparkEntry {
       val m = alibiLmModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3, batchSize = 256)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
           col("gen")(1).as("gen2"), col("gen")(2).as("gen3"))
@@ -1269,11 +1269,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3, batchSize = 256)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
           col("gen")(1).as("gen2"), col("gen")(2).as("gen3"))
@@ -1294,11 +1290,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3,
           batchSize = 256, forcedTokens = Map(1 -> 5),
           beginSuppress = Set(1, 2))
@@ -1318,11 +1310,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3,
           batchSize = 256, watermarkDelta = 2.0)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -1341,11 +1329,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       graft.operators.Watermark.greenFractionZ(
           t(s, dir, "documents").select(col("doc_id"),
-            transform(
-              call_function("regexp_extract_all", col("text"),
-                lit(graft.Tok.Pattern), lit(0)),
-              tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab)
-              .as("tok_ids")),
+            tokIds(col("text"), vocab).as("tok_ids")),
           "doc_id", col("tok_ids"))
         .select(col("doc_id"), col("t_pairs"), col("greens"),
           col("z6"), col("wm_flag"))
@@ -1363,11 +1347,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3,
           batchSize = 256, watermarkDelta = 2.0, watermarkGamma = (1, 4))
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -1385,11 +1365,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       graft.operators.Watermark.greenFractionZ(
           t(s, dir, "documents").select(col("doc_id"),
-            transform(
-              call_function("regexp_extract_all", col("text"),
-                lit(graft.Tok.Pattern), lit(0)),
-              tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab)
-              .as("tok_ids")),
+            tokIds(col("text"), vocab).as("tok_ids")),
           "doc_id", col("tok_ids"), gamma = (1, 4))
         .select(col("doc_id"), col("t_pairs"), col("greens"),
           col("z6"), col("wm_flag"))
@@ -1408,11 +1384,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcE = s.sparkContext.broadcast(m)
       val bcA = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.generateContrastiveDecoding(toks, "tok_ids", "gen", bcE, bcA,
           steps = 2, plausibilityAlpha = 0.125, batchSize = 256)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -1432,11 +1404,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcE = s.sparkContext.broadcast(m)
       val bcA = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       // a doc whose step-1 plausibility head is a SINGLE token keeps
       // one beam (the head IS the candidate set — CD never fabricates
       // a second hypothesis); beam-2 columns go null, like the
@@ -1462,11 +1430,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.speculativeSampled(toks, "doc_id", "tok_ids", bcT, bcD,
           batchSize = 256)
         .select(col("doc_id"), col("draft_tok"), col("accepted"),
@@ -1490,11 +1454,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.speculativeSampledGamma(toks, "doc_id", "tok_ids", bcT, bcD,
           gamma = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -1520,11 +1480,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       val counts = Array.fill(vocab)(Array.fill(vocab)(0L))
       toks.select(explode(zip_with(
             slice(col("tok_ids"), lit(1), greatest(size(col("tok_ids")) - 1, lit(0))),
@@ -1552,11 +1508,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.beamSearch(toks, "tok_ids", "beams", bc, steps = 2, width = 2,
           batchSize = 256, watermarkDelta = 2.0)
         .select(col("doc_id"),
@@ -1578,11 +1530,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.speculativeSampledGamma(toks, "doc_id", "tok_ids", bcT, bcD,
           gamma = 2, batchSize = 256)
         .groupBy(col("n_accepted").as("n_acc"))
@@ -1603,11 +1551,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(earlyExitModel)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.speculativeSampledGamma(toks, "doc_id", "tok_ids", bcT, bcD,
           gamma = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -1633,11 +1577,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.speculativeSampledLoop(toks, "doc_id", "tok_ids", bcT, bcD,
           gamma = 2, maxNewTokens = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -1658,11 +1598,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       val b = Torch.beamSearchDiverse(toks, "tok_ids", "beams", bc,
         steps = 2, width = 2, groups = 2, diversityPenalty = 0.5,
         batchSize = 256, lengthPenalty = 0.5, eosId = 1)
@@ -1732,9 +1668,7 @@ object SparkEntry {
         .filter(col("rk") === 1)
         .select(col("q_id"), col("vec_id").as("r_id"))
       val toks6 = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, 6),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("t6"))
+        tokIds(col("text"), vocab, 6).as("t6"))
       val prompts = nb
         .join(toks6.select(col("doc_id").as("r_id"), col("t6").as("rt")), "r_id")
         .join(toks6.select(col("doc_id").as("q_id"), col("t6").as("qt")), "q_id")
@@ -1760,11 +1694,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.generateSampledK(toks, "doc_id", "tok_ids", "gens", bc,
           steps = 1, temperature = 0.8, topP = 0.9,
           numReturnSequences = 5, batchSize = 256)
@@ -1792,11 +1722,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       val gens = Torch.generateSampledK(toks, "doc_id", "tok_ids", "gens", bc,
           steps = 2, temperature = 0.5, topP = 0.9,
           numReturnSequences = 3, batchSize = 256)
@@ -1829,11 +1755,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.generateSampled(toks, "doc_id", "tok_ids", "gen", bc,
           steps = 2, temperature = 0.5, topP = 0.9, batchSize = 256,
           watermarkDelta = 2.0)
@@ -1856,9 +1778,7 @@ object SparkEntry {
         transform(sequence(lit(0), lit(2)),
           i => conv(substring(md5(concat(col("lang"), i.cast("string"))), 1, 8),
             16, 10).cast("long") % vocab).as("pfx_ids"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen - 3),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
+        tokIds(col("text"), vocab, EncMaxLen - 3).as("tok_ids"))
         .filter(size(col("tok_ids")) >= 1)
       Torch.generateGreedySharedPrefix(toks, "pfx_ids", "tok_ids", "gen", bc,
           steps = 2, batchSize = 256)
@@ -1879,11 +1799,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.generateContrastive(toks, "tok_ids", "gen", bc, steps = 2,
           topK = 3, alpha = 0.5, batchSize = 256)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -1904,15 +1820,7 @@ object SparkEntry {
       val dvocab = m.seqHead.get.vocab
       val kvocab = m.encHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0))
-          .as("words"))
-        .filter(size(col("words")) >= 1)
-        .select(col("doc_id"),
-          transform(slice(col("words"), 1, 2),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % dvocab).as("d_ids"),
-          transform(slice(col("words"), 1, EncMaxLen),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % kvocab).as("s_ids"))
+      val toks = pairToks(s, dir, dvocab, kvocab)
       Torch.generateGreedyPair(toks, "d_ids", "s_ids", "gen", bc,
           steps = 2, batchSize = 256)
         .select(col("doc_id"), col("gen")(0).as("gen1"), col("gen")(1).as("gen2"))
@@ -1930,15 +1838,7 @@ object SparkEntry {
       val dvocab = m.seqHead.get.vocab
       val kvocab = m.encHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0))
-          .as("words"))
-        .filter(size(col("words")) >= 1)
-        .select(col("doc_id"),
-          transform(slice(col("words"), 1, 2),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % dvocab).as("d_ids"),
-          transform(slice(col("words"), 1, EncMaxLen),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % kvocab).as("s_ids"))
+      val toks = pairToks(s, dir, dvocab, kvocab)
       Torch.beamSearchPair(toks, "d_ids", "s_ids", "beams", bc,
           steps = 2, width = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -1966,15 +1866,7 @@ object SparkEntry {
       val kvocab = m.encHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0))
-          .as("words"))
-        .filter(size(col("words")) >= 1)
-        .select(col("doc_id"),
-          transform(slice(col("words"), 1, 2),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % dvocab).as("d_ids"),
-          transform(slice(col("words"), 1, EncMaxLen),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % kvocab).as("s_ids"))
+      val toks = pairToks(s, dir, dvocab, kvocab)
       val drafted = Torch.generateGreedyPair(toks, "d_ids", "s_ids", "draft",
         bcD, steps = 2, batchSize = 256)
       val withSeqs = drafted
@@ -2013,15 +1905,7 @@ object SparkEntry {
       val kvocab = m.encHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0))
-          .as("words"))
-        .filter(size(col("words")) >= 1)
-        .select(col("doc_id"),
-          transform(slice(col("words"), 1, 2),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % dvocab).as("d_ids"),
-          transform(slice(col("words"), 1, EncMaxLen),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % kvocab).as("s_ids"))
+      val toks = pairToks(s, dir, dvocab, kvocab)
       Torch.speculativeSampledPair(toks, "doc_id", "d_ids", "s_ids",
           bcT, bcD, batchSize = 256)
         .select(col("doc_id"), col("draft_tok"), col("accepted"),
@@ -2041,15 +1925,7 @@ object SparkEntry {
       val kvocab = m.encHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0))
-          .as("words"))
-        .filter(size(col("words")) >= 1)
-        .select(col("doc_id"),
-          transform(slice(col("words"), 1, 2),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % dvocab).as("d_ids"),
-          transform(slice(col("words"), 1, EncMaxLen),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % kvocab).as("s_ids"))
+      val toks = pairToks(s, dir, dvocab, kvocab)
       Torch.speculativeSampledPairGamma(toks, "doc_id", "d_ids", "s_ids",
           bcT, bcD, gamma = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -2074,11 +1950,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.generatePromptLookup(toks, "tok_ids", bc, ngram = 2,
           maxDraft = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -2107,11 +1979,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.treeDraftGreedy(toks, "tok_ids", bcT, bcD, branch = 2,
           depth = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -2140,11 +2008,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.treeDraftGreedyLoop(toks, "tok_ids", bcT, bcD, branch = 2,
           depth = 2, maxNewTokens = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -2166,11 +2030,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       val counts = Array.fill(vocab)(Array.fill(vocab)(0L))
       toks.select(explode(zip_with(
             slice(col("tok_ids"), lit(1), greatest(size(col("tok_ids")) - 1, lit(0))),
@@ -2203,11 +2063,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.speculativeSampledMultiDraftLoop(toks, "doc_id", "tok_ids",
           bcT, bcD, numDrafts = 2, maxNewTokens = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -2228,11 +2084,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.promptLookupSampled(toks, "doc_id", "tok_ids", bc, ngram = 2,
           maxDraft = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -2261,11 +2113,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(earlyExitModel)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.treeDraftTypical(toks, "tok_ids", bcT, bcD, branch = 2,
           depth = 2, posteriorEps = 0.25, posteriorAlpha = 0.5,
           batchSize = 256)
@@ -2297,11 +2145,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.treeDraftStochastic(toks, "doc_id", "tok_ids", bcT, bcD,
           branch = 2, depth = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -2332,11 +2176,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.speculativeSampledGamma(toks, "doc_id", "tok_ids", bcT, bcD,
           gamma = 2, batchSize = 256, watermarkDelta = 2.0)
         .select(col("doc_id"),
@@ -2363,15 +2203,7 @@ object SparkEntry {
       val kvocab = m.encHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0))
-          .as("words"))
-        .filter(size(col("words")) >= 1)
-        .select(col("doc_id"),
-          transform(slice(col("words"), 1, 2),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % dvocab).as("d_ids"),
-          transform(slice(col("words"), 1, EncMaxLen),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % kvocab).as("s_ids"))
+      val toks = pairToks(s, dir, dvocab, kvocab)
       Torch.speculativeSampledPairLoop(toks, "doc_id", "d_ids", "s_ids",
           bcT, bcD, gamma = 2, maxNewTokens = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -2395,11 +2227,7 @@ object SparkEntry {
       val m = alibiLmModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.generateGreedyWindowed(toks, "tok_ids", "gen", bc, steps = 3,
           nSink = 1, nWindow = 4, batchSize = 256)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -2420,11 +2248,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.autoGammaYield(toks, "doc_id", "tok_ids", bcT, bcD,
           maxGamma = 2, batchSize = 256)
         .orderBy("gamma")
@@ -2444,11 +2268,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.speculativeSampledLoop(toks, "doc_id", "tok_ids", bcT, bcD,
           gamma = 2, maxNewTokens = 2, batchSize = 256,
           nSink = 1, nWindow = 4)
@@ -2471,11 +2291,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.speculativeSampledLoop(toks, "doc_id", "tok_ids", bcT, bcD,
           gamma = 2, maxNewTokens = 2, batchSize = 256,
           watermarkDelta = 2.0)
@@ -2499,15 +2315,7 @@ object SparkEntry {
       val kvocab = m.encHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0))
-          .as("words"))
-        .filter(size(col("words")) >= 1)
-        .select(col("doc_id"),
-          transform(slice(col("words"), 1, 2),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % dvocab).as("d_ids"),
-          transform(slice(col("words"), 1, EncMaxLen),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % kvocab).as("s_ids"))
+      val toks = pairToks(s, dir, dvocab, kvocab)
       Torch.speculativeSampledPairGamma(toks, "doc_id", "d_ids", "s_ids",
           bcT, bcD, gamma = 2, batchSize = 256)
         .groupBy(col("n_accepted").as("n_acc"))
@@ -2533,11 +2341,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.treeDraftStochasticLoop(toks, "doc_id", "tok_ids", bcT, bcD,
           branch = 2, depth = 2, maxNewTokens = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -2559,11 +2363,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.speculativeSampledLoop(toks, "doc_id", "tok_ids", bcT, bcD,
           gamma = 2, maxNewTokens = 2, batchSize = 256,
           watermarkDelta = 2.0, nSink = 1, nWindow = 4)
@@ -2587,11 +2387,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       def leg(delta: Double, label: String) = {
         val gen = Torch.speculativeSampledLoop(toks, "doc_id", "tok_ids",
             bcT, bcD, gamma = 2, maxNewTokens = 2, batchSize = 256,
@@ -2628,15 +2424,7 @@ object SparkEntry {
       val kvocab = m.encHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0))
-          .as("words"))
-        .filter(size(col("words")) >= 1)
-        .select(col("doc_id"),
-          transform(slice(col("words"), 1, 2),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % dvocab).as("d_ids"),
-          transform(slice(col("words"), 1, EncMaxLen),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % kvocab).as("s_ids"))
+      val toks = pairToks(s, dir, dvocab, kvocab)
       Torch.speculativeSampledPairLoop(toks, "doc_id", "d_ids", "s_ids",
           bcT, bcD, gamma = 2, maxNewTokens = 2, batchSize = 256,
           nSink = 0, nWindow = 2)
@@ -2660,11 +2448,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(earlyExitModel)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.treeDraftTypicalLoop(toks, "tok_ids", bcT, bcD, branch = 2,
           depth = 2, posteriorEps = 0.25, posteriorAlpha = 0.5,
           maxNewTokens = 2, batchSize = 256)
@@ -2687,11 +2471,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.autoBranchYield(toks, "doc_id", "tok_ids", bcT, bcD,
           branches = Seq(1, 2), depth = 2, batchSize = 256)
         .orderBy("branch")
@@ -2710,9 +2490,7 @@ object SparkEntry {
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
       val toks = t(s, dir, "documents").select(col("doc_id"), col("source"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
+        tokIds(col("text"), vocab, EncMaxLen).as("tok_ids"))
         .filter(size(col("tok_ids")) >= 1)
       val perDoc = Torch.speculativeSampledGamma(toks, "doc_id", "tok_ids",
           bcT, bcD, gamma = 2, batchSize = 256)
@@ -2790,11 +2568,7 @@ object SparkEntry {
       val m = alibiRelLmModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.generateGreedyWindowed(toks, "tok_ids", "gen", bc, steps = 3,
           nSink = 1, nWindow = 4, batchSize = 256, relPos = true)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -2818,11 +2592,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.speculativeSampledLoop(toks, "doc_id", "tok_ids", bcT, bcD,
           gamma = 2, maxNewTokens = 2, batchSize = 256,
           nSink = 1, nWindow = 4, relPos = true)
@@ -2851,11 +2621,7 @@ object SparkEntry {
       val m = alibiLmModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.autoKvWindow(toks, "tok_ids", bc, steps = 3, nSink = 1,
         windows = Seq(2, 3, 4, 8, 16), divNum = 7, divDen = 20,
         batchSize = 256)
@@ -2875,11 +2641,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(earlyExitModel)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.treeDraftGreedy(toks, "tok_ids", bcT, bcD, branch = 2,
           depth = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -2904,11 +2666,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.treeDraftGreedy(toks, "tok_ids", bcT, bcD, branch = 2,
           depth = 2, batchSize = 256)
         .groupBy(col("n_accepted").as("n_acc"))
@@ -2929,11 +2687,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       val counts = Array.fill(vocab)(Array.fill(vocab)(0L))
       toks.select(explode(zip_with(
             slice(col("tok_ids"), lit(1), greatest(size(col("tok_ids")) - 1, lit(0))),
@@ -2965,11 +2719,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.speculativeSampledMultiDraft(toks, "doc_id", "tok_ids", bcT, bcD,
           numDrafts = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -2989,11 +2739,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       val counts = Array.fill(vocab)(Array.fill(vocab)(0L))
       toks.select(explode(zip_with(
             slice(col("tok_ids"), lit(1), greatest(size(col("tok_ids")) - 1, lit(0))),
@@ -3024,11 +2770,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.generatePromptLookupLoop(toks, "tok_ids", bc, ngram = 2,
           maxDraft = 2, maxNewTokens = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -3053,11 +2795,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.generatePromptLookupLoop(toks, "tok_ids", bc, ngram = 2,
           maxDraft = 2, maxNewTokens = 2, batchSize = 256,
           nSink = 1, nWindow = 4)
@@ -3083,11 +2821,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.treeDraftStochasticLoop(toks, "doc_id", "tok_ids", bcT, bcD,
           branch = 2, depth = 2, maxNewTokens = 2, batchSize = 256,
           nSink = 1, nWindow = 4)
@@ -3133,11 +2867,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.treeDraftGreedyLoop(toks, "tok_ids", bcT, bcD, branch = 2,
           depth = 2, maxNewTokens = 2, batchSize = 256,
           nSink = 1, nWindow = 4)
@@ -3162,11 +2892,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(earlyExitModel)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.treeDraftTypicalLoop(toks, "tok_ids", bcT, bcD, branch = 2,
           depth = 2, posteriorEps = 0.25, posteriorAlpha = 0.5,
           maxNewTokens = 2, batchSize = 256, nSink = 1, nWindow = 4)
@@ -3188,11 +2914,7 @@ object SparkEntry {
       val m = alibiRelLmModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.generatePromptLookupLoop(toks, "tok_ids", bc, ngram = 2,
           maxDraft = 2, maxNewTokens = 2, batchSize = 256,
           nSink = 1, nWindow = 4, relPos = true)
@@ -3216,11 +2938,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.treeDraftGreedyLoop(toks, "tok_ids", bcT, bcD, branch = 2,
           depth = 2, maxNewTokens = 2, batchSize = 256,
           nSink = 1, nWindow = 4, relPos = true)
@@ -3242,11 +2960,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.generatePromptLookup(toks, "tok_ids", bc, ngram = 2,
           maxDraft = 2, batchSize = 256)
         .groupBy(col("n_drafted").as("n_drf"), col("n_accepted").as("n_acc"))
@@ -3270,11 +2984,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       val counts = Array.fill(vocab)(Array.fill(vocab)(0L))
       toks.select(explode(zip_with(
             slice(col("tok_ids"), lit(1), greatest(size(col("tok_ids")) - 1, lit(0))),
@@ -3305,11 +3015,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.beamSearchDiverse(toks, "tok_ids", "beams", bc, steps = 2,
           width = 2, groups = 2, diversityPenalty = 0.5, batchSize = 256,
           watermarkDelta = 2.0)
@@ -3337,10 +3043,8 @@ object SparkEntry {
         call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0))
           .as("words"))
         .select(col("doc_id"),
-          transform(slice(col("words"), 1, 6),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % dvocab).as("d_ids"),
-          transform(slice(col("words"), 1, EncMaxLen),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % kvocab).as("s_ids"))
+          transform(slice(col("words"), 1, 6), tokHash(_, dvocab)).as("d_ids"),
+          transform(slice(col("words"), 1, EncMaxLen), tokHash(_, kvocab)).as("s_ids"))
         .filter(size(col("d_ids")) >= 2)
       Torch.scoreSeq2SeqBatched(toks, "d_ids", "s_ids", "nll", bc)
         .select(col("doc_id"),
@@ -3358,15 +3062,7 @@ object SparkEntry {
       val dvocab = m.seqHead.get.vocab
       val kvocab = m.encHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0))
-          .as("words"))
-        .filter(size(col("words")) >= 1)
-        .select(col("doc_id"),
-          transform(slice(col("words"), 1, 2),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % dvocab).as("d_ids"),
-          transform(slice(col("words"), 1, EncMaxLen),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % kvocab).as("s_ids"))
+      val toks = pairToks(s, dir, dvocab, kvocab)
       Torch.generateSampledPair(toks, "doc_id", "d_ids", "s_ids", "gen", bc,
           steps = 2, temperature = 0.5, topP = 0.9, batchSize = 256)
         .select(col("doc_id"), col("gen")(0).as("sm1"), col("gen")(1).as("sm2"))
@@ -3384,15 +3080,7 @@ object SparkEntry {
       val dvocab = m.seqHead.get.vocab
       val kvocab = m.encHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0))
-          .as("words"))
-        .filter(size(col("words")) >= 1)
-        .select(col("doc_id"),
-          transform(slice(col("words"), 1, 2),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % dvocab).as("d_ids"),
-          transform(slice(col("words"), 1, EncMaxLen),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % kvocab).as("s_ids"))
+      val toks = pairToks(s, dir, dvocab, kvocab)
       Torch.generateSampledPair(toks, "doc_id", "d_ids", "s_ids", "gen", bc,
           steps = 2, temperature = 0.5, topP = 0.9, batchSize = 256,
           topK = 3, repetitionPenalty = 1.25, noRepeatNgram = 2)
@@ -3409,15 +3097,7 @@ object SparkEntry {
       val dvocab = m.seqHead.get.vocab
       val kvocab = m.encHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0))
-          .as("words"))
-        .filter(size(col("words")) >= 1)
-        .select(col("doc_id"),
-          transform(slice(col("words"), 1, 2),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % dvocab).as("d_ids"),
-          transform(slice(col("words"), 1, EncMaxLen),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % kvocab).as("s_ids"))
+      val toks = pairToks(s, dir, dvocab, kvocab)
       Torch.generateGreedyPair(toks, "d_ids", "s_ids", "gen", bc,
           steps = 2, batchSize = 256, eosId = 5)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -3436,11 +3116,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.generateSampled(toks, "doc_id", "tok_ids", "gen", bc,
           steps = 2, temperature = 0.5, topP = 0.9, batchSize = 256)
         .select(col("doc_id"), col("gen")(0).as("sm1"), col("gen")(1).as("sm2"))
@@ -3459,11 +3135,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.generateSampledK(toks, "doc_id", "tok_ids", "gens", bc,
           steps = 2, temperature = 0.5, topP = 0.9,
           numReturnSequences = 3, batchSize = 256)
@@ -3486,11 +3158,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.generateSampledK(toks, "doc_id", "tok_ids", "gens", bc,
           steps = 2, temperature = 0.5, topP = 0.9,
           numReturnSequences = 3, batchSize = 256)
@@ -3513,11 +3181,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.generateSampled(toks, "doc_id", "tok_ids", "gen", bc,
           steps = 2, temperature = 0.5, topP = 0.9, batchSize = 256,
           repetitionPenalty = 1.25, noRepeatNgram = 2)
@@ -3534,11 +3198,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3,
           batchSize = 256, eosId = 1)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -3557,11 +3217,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 4,
           batchSize = 256, eosId = 1, minNewTokens = 2)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -3585,11 +3241,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.beamSearch(toks, "tok_ids", "beams", bc,
           steps = 2, width = 2, batchSize = 256, eosId = 1,
           repetitionPenalty = 1.5, noRepeatNgram = 2,
@@ -3613,11 +3265,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.beamSearchDiverse(toks, "tok_ids", "beams", bc,
           steps = 2, width = 2, groups = 2, diversityPenalty = 0.5,
           batchSize = 256)
@@ -3640,11 +3288,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.generateSampled(toks, "doc_id", "tok_ids", "gen", bc,
           steps = 2, temperature = 0.5, topP = 1.0, batchSize = 256,
           minP = 0.25)
@@ -3666,11 +3310,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.generateSampled(toks, "doc_id", "tok_ids", "gen", bc,
           steps = 2, temperature = 0.5, topP = 1.0, batchSize = 256,
           typicalP = 0.8)
@@ -3689,11 +3329,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3,
           batchSize = 256, dfaTrans = decodeDfaTrans)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -3712,11 +3348,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.generateSampled(toks, "doc_id", "tok_ids", "gen", bc,
           steps = 2, temperature = 0.5, topP = 0.9, batchSize = 256,
           topK = 3)
@@ -3733,11 +3365,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.generateSampled(toks, "doc_id", "tok_ids", "gen", bc,
           steps = 2, temperature = 0.5, topP = 0.9, batchSize = 256,
           banned = Set(1, 4))
@@ -4659,10 +4287,7 @@ object SparkEntry {
       val vocab = m.embedHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
       val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab)
-          .as("tok_ids"))
+        tokIds(col("text"), vocab).as("tok_ids"))
         // token-less docs (empty/whitespace/null text) have no pooled
         // embedding — the oracle's JOIN drops them, and classifying a
         // doc with zero evidence is meaningless; exclude explicitly on
@@ -4798,10 +4423,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
       val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab)
-          .as("tok_ids"))
+        tokIds(col("text"), vocab).as("tok_ids"))
         .filter(size(col("tok_ids")) >= 2)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
@@ -4811,7 +4433,7 @@ object SparkEntry {
 
     // Model-scored domain caps: keep each source's 20 docs with the
     // highest TextCNN class-2 logit — the double-scored top-k
-    // Aggregator (NaN-never-wins total order) over a genuinely
+    // Aggregator (NaN-greatest total order) over a genuinely
     // model-produced score. The logit is bit-exact across f32/f64
     // (dyadic weights, see textCnnModel), so the DuckDB window oracle
     // ranks identically — including exact ties, which both sides break
@@ -4821,10 +4443,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
       val toks = t(s, dir, "documents").select(col("doc_id"), col("source"),
-        transform(
-          call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab)
-          .as("tok_ids"))
+        tokIds(col("text"), vocab).as("tok_ids"))
         .filter(size(col("tok_ids")) >= 2)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("source"),
@@ -5017,11 +4636,7 @@ object SparkEntry {
       val m = attnModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, AttnMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab, AttnMaxLen)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("attn_class"))
@@ -5039,11 +4654,7 @@ object SparkEntry {
       val m = alibiModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, AttnMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab, AttnMaxLen)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("alibi_class"))
@@ -5059,11 +4670,7 @@ object SparkEntry {
       val m = localAttnModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, AttnMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab, AttnMaxLen)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("local_class"))
@@ -5079,11 +4686,7 @@ object SparkEntry {
       val m = ropeModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, AttnMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab, AttnMaxLen)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("rope_class"))
@@ -5101,11 +4704,7 @@ object SparkEntry {
       val m = attnPoolModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, AttnMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab, AttnMaxLen)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("pool_class"))
@@ -5121,11 +4720,7 @@ object SparkEntry {
       val m = gruModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, RnnMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab, RnnMaxLen)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("gru_class"))
@@ -5137,11 +4732,7 @@ object SparkEntry {
       val m = lstmModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, RnnMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab, RnnMaxLen)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("lstm_class"))
@@ -5159,9 +4750,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
       val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, RnnMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
+        tokIds(col("text"), vocab, RnnMaxLen).as("tok_ids"))
         .filter(size(col("tok_ids")) >= 2)
       Torch.scoreLmBatched(toks, "tok_ids", "mean_nll", bc)
         .select(col("doc_id"),
@@ -5269,12 +4858,7 @@ object SparkEntry {
       val m = tcnModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab)
-          .as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab, maxLen = 0)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("text_class"))
@@ -5291,12 +4875,7 @@ object SparkEntry {
       val m = causalTcnModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab)
-          .as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab, maxLen = 0)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("text_class"))
@@ -5311,12 +4890,7 @@ object SparkEntry {
       val m = gluRmsModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab)
-          .as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab, maxLen = 0)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("gated_class"))
@@ -5431,11 +5005,7 @@ object SparkEntry {
       val m = gqaModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("gqa_class"))
@@ -5450,11 +5020,7 @@ object SparkEntry {
       val m = encModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("enc_class"))
@@ -5475,9 +5041,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
       val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("k_ids"))
+        tokIds(col("text"), vocab, EncMaxLen).as("k_ids"))
         .filter(size(col("k_ids")) >= 1)
         .select(col("doc_id"), slice(col("k_ids"), 1, CrossQLen).as("q_ids"),
           col("k_ids"))
@@ -5498,11 +5062,7 @@ object SparkEntry {
       val m = loraEncModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("lora_class"))
@@ -5521,9 +5081,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
       val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen - 1),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("word_ids"))
+        tokIds(col("text"), vocab, EncMaxLen - 1).as("word_ids"))
         .filter(size(col("word_ids")) >= 1)
         .select(col("doc_id"),
           concat(array(lit(0L)), col("word_ids")).as("tok_ids"))
@@ -5544,11 +5102,7 @@ object SparkEntry {
       val m = decModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("dec_class"))
@@ -5566,11 +5120,7 @@ object SparkEntry {
       val m = sinPeModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, AttnMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab, AttnMaxLen)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("sinpe_class"))
@@ -5668,11 +5218,7 @@ object SparkEntry {
       val m = stackedGruModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, RnnMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab, RnnMaxLen)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("sgru_class"))
@@ -5689,11 +5235,7 @@ object SparkEntry {
       val m = biGruModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, RnnMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab, RnnMaxLen)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("bigru_class"))
@@ -5708,11 +5250,7 @@ object SparkEntry {
       val m = biLstmModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, RnnMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab, RnnMaxLen)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("bilstm_class"))
@@ -5728,11 +5266,7 @@ object SparkEntry {
       val m = meanGruModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, RnnMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab, RnnMaxLen)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("mgru_class"))
@@ -5762,9 +5296,7 @@ object SparkEntry {
         .select(col("doc_id"), col("t_rank"),
           concat(lit("spark join dup "), col("text")).as("pair_text"))
       val toks = pairs.select(col("doc_id"), col("t_rank"),
-        transform(
-          slice(call_function("regexp_extract_all", col("pair_text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
+        tokIds(col("pair_text"), vocab, EncMaxLen).as("tok_ids"))
         .filter(size(col("tok_ids")) >= 1)
       // global window is safe: the input is the k=20 candidate set —
       // join-fed, so Spread's exchange-bearing skip passes it through
@@ -5980,11 +5512,7 @@ object SparkEntry {
       val m = encPadModel
       val hashMod = m.seqHead.get.vocab - 1 // 32: top row is the pad id
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % hashMod).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, hashMod)
         .select(col("doc_id"),
           concat(col("tok_ids"), array_repeat(lit(hashMod.toLong),
             lit(EncMaxLen) - size(col("tok_ids")))).as("tok_ids"))
@@ -6004,11 +5532,7 @@ object SparkEntry {
       val m = mhaModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = docToks(s, dir, vocab)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("mha_class"))
@@ -9661,7 +9185,7 @@ object SparkEntry {
   lazy val oracleSql: Map[String, String] = oracleBuilt._1
 
   /** Query name → message of every oracle generator that threw. */
-  lazy val oracleSqlFailures: Map[String, String] = oracleBuilt._2
+  private[graft] lazy val oracleSqlFailures: Map[String, String] = oracleBuilt._2
 
   private lazy val oracleBuilt: (Map[String, String], Map[String, String]) = {
     val ok = ListMap.newBuilder[String, String]

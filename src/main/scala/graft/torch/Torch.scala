@@ -295,6 +295,89 @@ object Torch {
       math.min(maxDraft, L - matchAt - ngram))(k => full(matchAt + ngram + k))
   }
 
+  /** The prompt reader every entry point shares: column `idx` of `r`
+    * as token ids, or null for a null array, a null element and —
+    * unless `allowEmpty` — an empty array. Any boxed integral element
+    * type reads through `intValue`. */
+  private[torch] def promptIds(r: Row, idx: Int,
+      allowEmpty: Boolean = false): Array[Int] = {
+    if (r.isNullAt(idx)) return null
+    val xs = r.getSeq[Any](idx)
+    if (xs.isEmpty && !allowEmpty) return null
+    val a = new Array[Int](xs.length)
+    var j = 0
+    while (j < a.length) {
+      xs(j) match {
+        case null => return null
+        case f: java.lang.Number => a(j) = f.intValue()
+      }
+      j += 1
+    }
+    a
+  }
+
+  /** The greedy pick every entry point shares: the first maximum of
+    * `out(off until off + vocab)`. NaN never wins, strict `>` keeps
+    * the lowest id on ties, and `banned` ids are never candidates
+    * (constrained decoding); no candidate left throws "all-NaN
+    * logits". */
+  private[torch] def argmaxFirst(out: Array[Float], off: Int, vocab: Int,
+      banned: Set[Int] = Set.empty): Int = {
+    val anyBanned = banned.nonEmpty
+    var best = -1
+    var bv = Float.NaN
+    var j = 0
+    while (j < vocab) {
+      val v = out(off + j)
+      if (!v.isNaN && (best < 0 || v > bv) && !(anyBanned && banned.contains(j))) {
+        best = j; bv = v
+      }
+      j += 1
+    }
+    require(best >= 0, "all-NaN logits")
+    best
+  }
+
+  /** The greedy KV loop behind every greedy entry point: up to
+    * `steps` times, `pick(sess, gen)` chooses the next token from the
+    * session (plain: the [[argmaxFirst]] of `sess.logits()`); it is
+    * emitted and appended, except that emitting `eosId` ends the row.
+    * The caller opens `sess` — full, windowed, re-rotated, forked from
+    * a shared prefix, or encoder-decoder. */
+  private def greedyLoop(sess: TorchScriptModel#DecodeSession, steps: Int,
+      eosId: Int = -1)(pick: (TorchScriptModel#DecodeSession,
+        scala.collection.IndexedSeq[Int]) => Int): Array[Int] = {
+    val gen = scala.collection.mutable.ArrayBuffer.empty[Int]
+    var stopped = false
+    while (gen.length < steps && !stopped) {
+      val tid = pick(sess, gen)
+      gen += tid
+      if (tid == eosId) stopped = true else sess.append(tid)
+    }
+    gen.toArray
+  }
+
+  /** The row-kernel scaffold every entry point shares: `df` spread
+    * ([[graft.Spread]]) with `intCols` cast to `cast`. [[idx]] resolves
+    * a column of that frame; [[run]] maps its partitions through one
+    * Dataset-typed `mapPartitions` (one logical plan, no RDD rescan or
+    * extra job boundary), each row carrying the nullable `out` fields
+    * appended. */
+  private final class RowKernel(df: DataFrame, intCols: Seq[String],
+      out: Seq[(String, DataType)], cast: DataType = ArrayType(IntegerType)) {
+    private val in = intCols.foldLeft(graft.Spread(df))((d, c) =>
+      d.withColumn(c, col(c).cast(cast)))
+    def idx(c: String): Int = in.schema.fieldIndex(c)
+    def run(kernel: Iterator[Row] => Iterator[Row]): DataFrame =
+      in.mapPartitions(kernel)(org.apache.spark.sql.Encoders.row(StructType(
+        in.schema.fields ++ out.map { case (n, t) => StructField(n, t, nullable = true) })))
+  }
+
+  /** `batchSize`, or the session's `torchfusion.batch_size` when it is
+    * not positive. */
+  private def batchOf(df: DataFrame, batchSize: Int): Int =
+    if (batchSize > 0) batchSize else TorchConf.get(df.sparkSession).batchSize
+
   /** The constrained beam-candidate expansion shared by [[beamSearch]]
     * and [[beamSearchPair]] — one live beam's candidate rows under the
     * full logit-constraint set, applied in the HF beam-search order:
@@ -481,24 +564,16 @@ object Torch {
       outputCol: String,
       model: Broadcast[TorchScriptModel],
       batchSize: Int = -1): DataFrame = {
-    val spark = df.sparkSession
-    val bs =
-      if (batchSize > 0) batchSize
-      else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     // token-input (embedding-head) models read int token ids; feature
     // models read f32 vectors (pixel models go through inferImageBatched)
     require(model.value.imageHead.isEmpty,
       "pixel-input model: use Torch.inferImageBatched")
     val tokenInput = model.value.inDim == -1
-    val withFloats = graft.Spread(df).withColumn(inputCol, col(inputCol).cast(
-      if (tokenInput) ArrayType(IntegerType) else ArrayType(FloatType)))
-    val schema = StructType(withFloats.schema.fields :+
-      StructField(outputCol, ArrayType(FloatType), nullable = true))
-    val inIdx = withFloats.schema.fieldIndex(inputCol)
-    // Dataset-typed mapPartitions (NOT df.rdd + createDataFrame): one
-    // logical plan, no ExistingRDD rescan or extra job boundary; the
-    // grouped(bs) GEMM batching below is unchanged
-    withFloats.mapPartitions { it =>
+    val rk = new RowKernel(df, Seq(inputCol), Seq(outputCol -> ArrayType(FloatType)),
+      if (tokenInput) ArrayType(IntegerType) else ArrayType(FloatType))
+    val inIdx = rk.idx(inputCol)
+    rk.run { it =>
       val m = model.value
       val inDim = m.inDim
       val outDim = m.outDim
@@ -522,20 +597,6 @@ object Torch {
         }
         // variable-length token rows: no length requirement — pooling
         // is per-row, the GEMM batch is the pooled (n, embDim) matrix
-        def tokens(r: Row): Array[Int] = {
-          if (r.isNullAt(inIdx)) return null
-          val xs = r.getSeq[Any](inIdx)
-          val a = new Array[Int](xs.length)
-          var j = 0
-          while (j < a.length) {
-            xs(j) match {
-              case null => return null
-              case f: java.lang.Number => a(j) = f.intValue()
-            }
-            j += 1
-          }
-          a
-        }
         // null inputs stay null in the output; live rows take their
         // forward-pass slice in order (one shared assembly for both
         // input shapes)
@@ -550,7 +611,7 @@ object Torch {
           }
         }
         if (tokenInput) {
-          val inputs = rows.map(tokens)
+          val inputs = rows.map(promptIds(_, inIdx, allowEmpty = true))
           val live = inputs.filter(_ != null).toArray
           val out = if (live.nonEmpty) m.forwardTokensBatch(live) else Array.empty[Float]
           emit(inputs, out)
@@ -568,7 +629,7 @@ object Torch {
           emit(inputs, out)
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -589,38 +650,16 @@ object Torch {
       outputCol: String,
       model: Broadcast[TorchScriptModel],
       batchSize: Int = -1): DataFrame = {
-    val spark = df.sparkSession
-    val bs =
-      if (batchSize > 0) batchSize
-      else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(model.value.isCross, "not a cross-attention model: use inferBatched")
-    val withInts = graft.Spread(df)
-      .withColumn(queryCol, col(queryCol).cast(ArrayType(IntegerType)))
-      .withColumn(keyCol, col(keyCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outputCol, ArrayType(FloatType), nullable = true))
-    val qIdx = withInts.schema.fieldIndex(queryCol)
-    val kIdx = withInts.schema.fieldIndex(keyCol)
-    withInts.mapPartitions { it =>
+    val rk = new RowKernel(df, Seq(queryCol, keyCol), Seq(outputCol -> ArrayType(FloatType)))
+    val qIdx = rk.idx(queryCol)
+    val kIdx = rk.idx(keyCol)
+    rk.run { it =>
       val m = model.value
       val outDim = m.outDim
       it.grouped(bs).flatMap { rows =>
-        def tokens(r: Row, idx: Int): Array[Int] = {
-          if (r.isNullAt(idx)) return null
-          val xs = r.getSeq[Any](idx)
-          if (xs.isEmpty) return null
-          val a = new Array[Int](xs.length)
-          var j = 0
-          while (j < a.length) {
-            xs(j) match {
-              case null => return null
-              case f: java.lang.Number => a(j) = f.intValue()
-            }
-            j += 1
-          }
-          a
-        }
-        val pairs = rows.map(r => (tokens(r, qIdx), tokens(r, kIdx)))
+        val pairs = rows.map(r => (promptIds(r, qIdx), promptIds(r, kIdx)))
         val live = pairs.filter(p => p._1 != null && p._2 != null).toArray
         val out =
           if (live.nonEmpty)
@@ -635,7 +674,7 @@ object Torch {
           }
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -655,15 +694,11 @@ object Torch {
       model: Broadcast[TorchScriptModel],
       c: Int, h: Int, w: Int,
       batchSize: Int = -1): DataFrame = {
-    val spark = df.sparkSession
-    val bs =
-      if (batchSize > 0) batchSize
-      else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(model.value.imageHead.isDefined, "not a pixel-input model")
-    val schema = StructType(df.schema.fields :+
-      StructField(outputCol, ArrayType(FloatType), nullable = true))
-    val inIdx = df.schema.fieldIndex(inputCol)
-    graft.Spread(df).mapPartitions { it =>
+    val rk = new RowKernel(df, Nil, Seq(outputCol -> ArrayType(FloatType)))
+    val inIdx = rk.idx(inputCol)
+    rk.run { it =>
       val m = model.value
       val outDim = m.outDim
       it.grouped(bs).flatMap { rows =>
@@ -688,7 +723,7 @@ object Torch {
           }
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -707,32 +742,16 @@ object Torch {
       inputCol: String,
       outputCol: String,
       model: Broadcast[TorchScriptModel]): DataFrame = {
-    val withInts = graft.Spread(df).withColumn(inputCol, col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outputCol, DoubleType, nullable = true))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    withInts.mapPartitions { it =>
+    val rk = new RowKernel(df, Seq(inputCol), Seq(outputCol -> DoubleType))
+    val inIdx = rk.idx(inputCol)
+    rk.run { it =>
       val m = model.value
       it.map { r =>
-        val toks: Array[Int] =
-          if (r.isNullAt(inIdx)) null
-          else {
-            val xs = r.getSeq[Any](inIdx)
-            val a = new Array[Int](xs.length)
-            var j = 0
-            var ok = true
-            while (ok && j < a.length) {
-              xs(j) match {
-                case null => ok = false
-                case f: java.lang.Number => a(j) = f.intValue(); j += 1
-              }
-            }
-            if (ok) a else null
-          }
+        val toks: Array[Int] = promptIds(r, inIdx, allowEmpty = true)
         if (toks == null || toks.length < 2) Row.fromSeq(r.toSeq :+ null)
         else Row.fromSeq(r.toSeq :+ m.lmMeanNll(toks))
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -750,37 +769,19 @@ object Torch {
       keyCol: String,
       outputCol: String,
       model: Broadcast[TorchScriptModel]): DataFrame = {
-    val withInts = graft.Spread(df)
-      .withColumn(queryCol, col(queryCol).cast(ArrayType(IntegerType)))
-      .withColumn(keyCol, col(keyCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outputCol, DoubleType, nullable = true))
-    val qIdx = withInts.schema.fieldIndex(queryCol)
-    val kIdx = withInts.schema.fieldIndex(keyCol)
-    withInts.mapPartitions { it =>
+    val rk = new RowKernel(df, Seq(queryCol, keyCol), Seq(outputCol -> DoubleType))
+    val qIdx = rk.idx(queryCol)
+    val kIdx = rk.idx(keyCol)
+    rk.run { it =>
       val m = model.value
-      def toks(r: Row, idx: Int): Array[Int] = {
-        if (r.isNullAt(idx)) return null
-        val xs = r.getSeq[Any](idx)
-        val a = new Array[Int](xs.length)
-        var j = 0
-        while (j < a.length) {
-          xs(j) match {
-            case null => return null
-            case f: java.lang.Number => a(j) = f.intValue()
-          }
-          j += 1
-        }
-        a
-      }
       it.map { r =>
-        val d = toks(r, qIdx)
-        val k = toks(r, kIdx)
+        val d = promptIds(r, qIdx, allowEmpty = true)
+        val k = promptIds(r, kIdx, allowEmpty = true)
         if (d == null || k == null || d.length < 2 || k.isEmpty)
           Row.fromSeq(r.toSeq :+ null)
         else Row.fromSeq(r.toSeq :+ m.seq2seqMeanNll(d, k))
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -837,7 +838,7 @@ object Torch {
     require(watermarkGamma._1 >= 1 && watermarkGamma._1 < watermarkGamma._2,
       "watermarkGamma must be a fraction num/den with 0 < num < den")
     val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(model.value.inDim == -1, "beamSearch needs a token-input model")
     require(!model.value.isCross, "cross-attention model: use beamSearchPair")
     require(width <= model.value.outDim, "width exceeds the vocabulary")
@@ -888,12 +889,9 @@ object Torch {
     val bcLm: Broadcast[(Array[Array[Long]], Array[Long])] =
       if (lmWeight == 0.0) null
       else spark.sparkContext.broadcast((lmCounts, lmCounts.map(_.sum)))
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outCol, ArrayType(ArrayType(IntegerType)), nullable = true))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    withInts.mapPartitions { it =>
+    val rk = new RowKernel(df, Seq(inputCol), Seq(outCol -> ArrayType(ArrayType(IntegerType))))
+    val inIdx = rk.idx(inputCol)
+    rk.run { it =>
       val m = model.value
       val vocab = m.outDim
       val lm = if (bcLm == null) null else bcLm.value
@@ -940,22 +938,7 @@ object Torch {
         Array.tabulate(vocab)(k => adj(k) - lse)
       }
       it.grouped(bs).flatMap { rows =>
-        val prompts: Array[Array[Int]] = rows.map { r =>
-          if (r.isNullAt(inIdx)) null
-          else {
-            val xs = r.getSeq[Any](inIdx)
-            val a = new Array[Int](xs.length)
-            var j = 0
-            var ok = true
-            while (ok && j < a.length) {
-              xs(j) match {
-                case null => ok = false
-                case f: java.lang.Number => a(j) = f.intValue(); j += 1
-              }
-            }
-            if (ok && a.nonEmpty) a else null
-          }
-        }.toArray
+        val prompts: Array[Array[Int]] = rows.map(promptIds(_, inIdx)).toArray
         if (m.cacheable && !m.isCross) {
           // KV-cache beams: each beam owns a decode session; expansion
           // FORKS the parent (O(L) pointer copy, no prompt replay).
@@ -1076,7 +1059,7 @@ object Torch {
           }
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -1174,19 +1157,15 @@ object Torch {
     require(watermarkDelta >= 0.0, "watermarkDelta must be >= 0")
     require(watermarkGamma._1 >= 1 && watermarkGamma._1 < watermarkGamma._2,
       "watermarkGamma must be a fraction num/den with 0 < num < den")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(model.value.inDim == -1, "beamSearchDiverse needs a token-input model")
     require(!model.value.isCross, "cross-attention model: use beamSearchPair")
     require(width <= model.value.outDim, "width exceeds the vocabulary")
     require(model.value.cacheable,
       "diverse beam search needs the KV-session path (cacheable model)")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outCol, ArrayType(ArrayType(IntegerType)), nullable = true))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    withInts.mapPartitions { it =>
+    val rk = new RowKernel(df, Seq(inputCol), Seq(outCol -> ArrayType(ArrayType(IntegerType))))
+    val inIdx = rk.idx(inputCol)
+    rk.run { it =>
       val m = model.value
       val vocab = m.outDim
       val lm = if (bcLm == null) null else bcLm.value
@@ -1228,21 +1207,7 @@ object Torch {
       }
       it.grouped(bs).flatMap { rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
+          val p: Array[Int] = promptIds(r, inIdx)
           if (p == null) Row.fromSeq(r.toSeq :+ null)
           else {
             // per group: ranked beams (generated, running score,
@@ -1315,7 +1280,7 @@ object Torch {
           }
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -1351,8 +1316,7 @@ object Torch {
       target: Broadcast[TorchScriptModel],
       draft: Broadcast[TorchScriptModel],
       batchSize: Int = -1): DataFrame = {
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(target.value.inDim == -1 && draft.value.inDim == -1,
       "speculativeSampled needs token-input models")
     require(!target.value.isCross && !draft.value.isCross,
@@ -1361,15 +1325,11 @@ object Torch {
       "draft and target must share the vocabulary")
     require(target.value.cacheable && draft.value.cacheable,
       "speculative sampling needs the KV-session path (cacheable models)")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("draft_tok", IntegerType, nullable = true),
-      StructField("accepted", BooleanType, nullable = true),
-      StructField("final_tok", IntegerType, nullable = true)))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    val idIdx = withInts.schema.fieldIndex(idCol)
-    withInts.mapPartitions { it =>
+    val rk = new RowKernel(df, Seq(inputCol),
+      Seq("draft_tok" -> IntegerType, "accepted" -> BooleanType, "final_tok" -> IntegerType))
+    val inIdx = rk.idx(inputCol)
+    val idIdx = rk.idx(idCol)
+    rk.run { it =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
@@ -1382,21 +1342,7 @@ object Torch {
       def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
       it.grouped(bs).flatMap { rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx) || r.isNullAt(idIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
+          val p: Array[Int] = if (r.isNullAt(idIdx)) null else promptIds(r, inIdx)
           if (p == null) Row.fromSeq(r.toSeq ++ Seq(null, null, null))
           else {
             val id = r.getAs[Number](idIdx).longValue()
@@ -1417,7 +1363,7 @@ object Torch {
           }
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -1484,8 +1430,7 @@ object Torch {
     require(watermarkDelta >= 0.0, "watermarkDelta must be >= 0")
     require(watermarkGamma._1 >= 1 && watermarkGamma._1 < watermarkGamma._2,
       "watermarkGamma must be a fraction num/den with 0 < num < den")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(target.value.inDim == -1 && draft.value.inDim == -1,
       "speculativeSampledGamma needs token-input models")
     require(!target.value.isCross && !draft.value.isCross,
@@ -1494,16 +1439,14 @@ object Torch {
       "draft and target must share the vocabulary")
     require(target.value.cacheable && draft.value.cacheable,
       "speculative sampling needs the KV-session path (cacheable models)")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("draft_toks", ArrayType(IntegerType), nullable = true),
-      StructField("n_accepted", IntegerType, nullable = true),
-      StructField("out_toks", ArrayType(IntegerType), nullable = true)))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    val idIdx = withInts.schema.fieldIndex(idCol)
+    val rk = new RowKernel(df, Seq(inputCol), Seq(
+      "draft_toks" -> ArrayType(IntegerType),
+      "n_accepted" -> IntegerType,
+      "out_toks" -> ArrayType(IntegerType)))
+    val inIdx = rk.idx(inputCol)
+    val idIdx = rk.idx(idCol)
     val (wmNum, wmDen) = watermarkGamma
-    withInts.mapPartitions { it =>
+    rk.run { it =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
@@ -1536,21 +1479,7 @@ object Torch {
         }
       it.grouped(bs).flatMap { rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx) || r.isNullAt(idIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
+          val p: Array[Int] = if (r.isNullAt(idIdx)) null else promptIds(r, inIdx)
           if (p == null) Row.fromSeq(r.toSeq ++ Seq(null, null, null))
           else {
             val id = r.getAs[Number](idIdx).longValue()
@@ -1600,7 +1529,7 @@ object Torch {
           }
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -1679,8 +1608,7 @@ object Torch {
     val windowed = nWindow > 0
     require(!windowed || nSink >= 0,
       "a bounded-KV loop needs nSink >= 0 alongside nWindow >= 1")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(target.value.inDim == -1 && draft.value.inDim == -1,
       "speculativeSampledLoop needs token-input models")
     require(!target.value.isCross && !draft.value.isCross,
@@ -1689,16 +1617,14 @@ object Torch {
       "draft and target must share the vocabulary")
     require(target.value.cacheable && draft.value.cacheable,
       "speculative sampling needs the KV-session path (cacheable models)")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("out_toks", ArrayType(IntegerType), nullable = true),
-      StructField("n_cycles", IntegerType, nullable = true),
-      StructField("n_acc_total", IntegerType, nullable = true)))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    val idIdx = withInts.schema.fieldIndex(idCol)
+    val rk = new RowKernel(df, Seq(inputCol), Seq(
+      "out_toks" -> ArrayType(IntegerType),
+      "n_cycles" -> IntegerType,
+      "n_acc_total" -> IntegerType))
+    val inIdx = rk.idx(inputCol)
+    val idIdx = rk.idx(idCol)
     val (wmNum, wmDen) = watermarkGamma
-    withInts.mapPartitions { it =>
+    rk.run { it =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
@@ -1728,21 +1654,7 @@ object Torch {
         }
       it.grouped(bs).flatMap { rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx) || r.isNullAt(idIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
+          val p: Array[Int] = if (r.isNullAt(idIdx)) null else promptIds(r, inIdx)
           if (p == null) Row.fromSeq(r.toSeq ++ Seq(null, null, null))
           else {
             val id = r.getAs[Number](idIdx).longValue()
@@ -1816,7 +1728,7 @@ object Torch {
           }
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -1843,8 +1755,7 @@ object Torch {
       target: Broadcast[TorchScriptModel],
       draft: Broadcast[TorchScriptModel],
       batchSize: Int = -1): DataFrame = {
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(target.value.inDim == -1 && draft.value.inDim == -1,
       "speculativeSampledPair needs token-input models")
     require(target.value.isCross && draft.value.isCross,
@@ -1853,17 +1764,12 @@ object Torch {
       "draft and target must share the vocabulary")
     require(target.value.cacheable && draft.value.cacheable,
       "speculative sampling needs the KV-session path (cacheable models)")
-    val withInts = graft.Spread(df)
-      .withColumn(decCol, col(decCol).cast(ArrayType(IntegerType)))
-      .withColumn(encCol, col(encCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("draft_tok", IntegerType, nullable = true),
-      StructField("accepted", BooleanType, nullable = true),
-      StructField("final_tok", IntegerType, nullable = true)))
-    val dIdx = withInts.schema.fieldIndex(decCol)
-    val eIdx = withInts.schema.fieldIndex(encCol)
-    val idIdx = withInts.schema.fieldIndex(idCol)
-    withInts.mapPartitions { it =>
+    val rk = new RowKernel(df, Seq(decCol, encCol),
+      Seq("draft_tok" -> IntegerType, "accepted" -> BooleanType, "final_tok" -> IntegerType))
+    val dIdx = rk.idx(decCol)
+    val eIdx = rk.idx(encCol)
+    val idIdx = rk.idx(idCol)
+    rk.run { it =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
@@ -1871,25 +1777,10 @@ object Torch {
       def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
       def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
       def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
-      def ints(r: Row, idx: Int): Array[Int] =
-        if (r.isNullAt(idx)) null
-        else {
-          val xs = r.getSeq[Any](idx)
-          val a = new Array[Int](xs.length)
-          var j = 0
-          var ok = true
-          while (ok && j < a.length) {
-            xs(j) match {
-              case null => ok = false
-              case f: java.lang.Number => a(j) = f.intValue(); j += 1
-            }
-          }
-          if (ok && a.nonEmpty) a else null
-        }
       it.grouped(bs).flatMap { rows =>
         rows.iterator.map { r =>
-          val p = ints(r, dIdx)
-          val src = ints(r, eIdx)
+          val p = promptIds(r, dIdx)
+          val src = promptIds(r, eIdx)
           if (p == null || src == null || r.isNullAt(idIdx))
             Row.fromSeq(r.toSeq ++ Seq(null, null, null))
           else {
@@ -1911,7 +1802,7 @@ object Torch {
           }
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -1940,8 +1831,7 @@ object Torch {
       gamma: Int,
       batchSize: Int = -1): DataFrame = {
     require(gamma >= 1, "gamma must be >= 1")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(target.value.inDim == -1 && draft.value.inDim == -1,
       "speculativeSampledPairGamma needs token-input models")
     require(target.value.isCross && draft.value.isCross,
@@ -1950,17 +1840,14 @@ object Torch {
       "draft and target must share the vocabulary")
     require(target.value.cacheable && draft.value.cacheable,
       "speculative sampling needs the KV-session path (cacheable models)")
-    val withInts = graft.Spread(df)
-      .withColumn(decCol, col(decCol).cast(ArrayType(IntegerType)))
-      .withColumn(encCol, col(encCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("draft_toks", ArrayType(IntegerType), nullable = true),
-      StructField("n_accepted", IntegerType, nullable = true),
-      StructField("out_toks", ArrayType(IntegerType), nullable = true)))
-    val dIdx = withInts.schema.fieldIndex(decCol)
-    val eIdx = withInts.schema.fieldIndex(encCol)
-    val idIdx = withInts.schema.fieldIndex(idCol)
-    withInts.mapPartitions { it =>
+    val rk = new RowKernel(df, Seq(decCol, encCol), Seq(
+      "draft_toks" -> ArrayType(IntegerType),
+      "n_accepted" -> IntegerType,
+      "out_toks" -> ArrayType(IntegerType)))
+    val dIdx = rk.idx(decCol)
+    val eIdx = rk.idx(encCol)
+    val idIdx = rk.idx(idCol)
+    rk.run { it =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
@@ -1968,25 +1855,10 @@ object Torch {
       def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
       def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
       def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
-      def ints(r: Row, idx: Int): Array[Int] =
-        if (r.isNullAt(idx)) null
-        else {
-          val xs = r.getSeq[Any](idx)
-          val a = new Array[Int](xs.length)
-          var j = 0
-          var ok = true
-          while (ok && j < a.length) {
-            xs(j) match {
-              case null => ok = false
-              case f: java.lang.Number => a(j) = f.intValue(); j += 1
-            }
-          }
-          if (ok && a.nonEmpty) a else null
-        }
       it.grouped(bs).flatMap { rows =>
         rows.iterator.map { r =>
-          val p = ints(r, dIdx)
-          val src = ints(r, eIdx)
+          val p = promptIds(r, dIdx)
+          val src = promptIds(r, eIdx)
           if (p == null || src == null || r.isNullAt(idIdx))
             Row.fromSeq(r.toSeq ++ Seq(null, null, null))
           else {
@@ -2034,7 +1906,7 @@ object Torch {
           }
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -2083,8 +1955,7 @@ object Torch {
     val windowed = nWindow > 0
     require(!windowed || nSink >= 0,
       "a bounded-KV loop needs nSink >= 0 alongside nWindow >= 1")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(target.value.inDim == -1 && draft.value.inDim == -1,
       "speculativeSampledPairLoop needs token-input models")
     require(target.value.isCross && draft.value.isCross,
@@ -2093,17 +1964,14 @@ object Torch {
       "draft and target must share the vocabulary")
     require(target.value.cacheable && draft.value.cacheable,
       "speculative sampling needs the KV-session path (cacheable models)")
-    val withInts = graft.Spread(df)
-      .withColumn(decCol, col(decCol).cast(ArrayType(IntegerType)))
-      .withColumn(encCol, col(encCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("out_toks", ArrayType(IntegerType), nullable = true),
-      StructField("n_cycles", IntegerType, nullable = true),
-      StructField("n_acc_total", IntegerType, nullable = true)))
-    val dIdx = withInts.schema.fieldIndex(decCol)
-    val eIdx = withInts.schema.fieldIndex(encCol)
-    val idIdx = withInts.schema.fieldIndex(idCol)
-    withInts.mapPartitions { it =>
+    val rk = new RowKernel(df, Seq(decCol, encCol), Seq(
+      "out_toks" -> ArrayType(IntegerType),
+      "n_cycles" -> IntegerType,
+      "n_acc_total" -> IntegerType))
+    val dIdx = rk.idx(decCol)
+    val eIdx = rk.idx(encCol)
+    val idIdx = rk.idx(idCol)
+    rk.run { it =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
@@ -2111,25 +1979,10 @@ object Torch {
       def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
       def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
       def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
-      def ints(r: Row, idx: Int): Array[Int] =
-        if (r.isNullAt(idx)) null
-        else {
-          val xs = r.getSeq[Any](idx)
-          val a = new Array[Int](xs.length)
-          var j = 0
-          var ok = true
-          while (ok && j < a.length) {
-            xs(j) match {
-              case null => ok = false
-              case f: java.lang.Number => a(j) = f.intValue(); j += 1
-            }
-          }
-          if (ok && a.nonEmpty) a else null
-        }
       it.grouped(bs).flatMap { rows =>
         rows.iterator.map { r =>
-          val p = ints(r, dIdx)
-          val src = ints(r, eIdx)
+          val p = promptIds(r, dIdx)
+          val src = promptIds(r, eIdx)
           if (p == null || src == null || r.isNullAt(idIdx))
             Row.fromSeq(r.toSeq ++ Seq(null, null, null))
           else {
@@ -2199,7 +2052,7 @@ object Torch {
           }
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -2232,8 +2085,7 @@ object Torch {
     require(steps >= 1, "steps must be >= 1")
     require(plausibilityAlpha > 0.0 && plausibilityAlpha <= 1.0,
       "plausibilityAlpha must be in (0, 1]")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(expert.value.inDim == -1 && amateur.value.inDim == -1,
       "contrastive decoding needs token-input models")
     require(!expert.value.isCross && !amateur.value.isCross,
@@ -2242,12 +2094,9 @@ object Torch {
       "expert and amateur must share the vocabulary")
     require(expert.value.cacheable && amateur.value.cacheable,
       "contrastive decoding needs the KV-session path")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outCol, ArrayType(IntegerType), nullable = true))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    withInts.mapPartitions { it =>
+    val rk = new RowKernel(df, Seq(inputCol), Seq(outCol -> ArrayType(IntegerType)))
+    val inIdx = rk.idx(inputCol)
+    rk.run { it =>
       val em = expert.value
       val am = amateur.value
       val vocab = em.outDim
@@ -2271,21 +2120,7 @@ object Torch {
       }
       it.grouped(bs).flatMap { rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
+          val p: Array[Int] = promptIds(r, inIdx)
           if (p == null) Row.fromSeq(r.toSeq :+ null)
           else {
             val se = em.decodeSession(p)
@@ -2309,7 +2144,7 @@ object Torch {
           }
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -2355,8 +2190,7 @@ object Torch {
     require(steps >= 1 && width >= 1, "steps and width must be >= 1")
     require(plausibilityAlpha > 0.0 && plausibilityAlpha <= 1.0,
       "plausibilityAlpha must be in (0, 1]")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(expert.value.inDim == -1 && amateur.value.inDim == -1,
       "contrastive beam decoding needs token-input models")
     require(!expert.value.isCross && !amateur.value.isCross,
@@ -2366,12 +2200,9 @@ object Torch {
     require(width <= expert.value.outDim, "width exceeds the vocabulary")
     require(expert.value.cacheable && amateur.value.cacheable,
       "contrastive beam decoding needs the KV-session path")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outCol, ArrayType(ArrayType(IntegerType)), nullable = true))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    withInts.mapPartitions { it =>
+    val rk = new RowKernel(df, Seq(inputCol), Seq(outCol -> ArrayType(ArrayType(IntegerType))))
+    val inIdx = rk.idx(inputCol)
+    rk.run { it =>
       val em = expert.value
       val am = amateur.value
       val vocab = em.outDim
@@ -2394,21 +2225,7 @@ object Torch {
       }
       it.grouped(bs).flatMap { rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
+          val p: Array[Int] = promptIds(r, inIdx)
           if (p == null) Row.fromSeq(r.toSeq :+ null)
           else {
             // beam state: (generated, CD running score, expert
@@ -2443,7 +2260,7 @@ object Torch {
           }
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -2470,42 +2287,22 @@ object Torch {
       outCol: String,
       model: Broadcast[TorchScriptModel],
       batchSize: Int = -1): DataFrame = {
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(model.value.inDim == -1,
       "scoreContinuationBatched needs a token-input model")
     require(!model.value.isCross, "cross model: use scoreSeq2SeqBatched")
     require(model.value.cacheable,
       "continuation scoring needs the KV-session path (cacheable model)")
-    val withInts = graft.Spread(df)
-      .withColumn(inputCol, col(inputCol).cast(ArrayType(IntegerType)))
-      .withColumn(contCol, col(contCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outCol, DoubleType, nullable = true))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    val cIdx = withInts.schema.fieldIndex(contCol)
-    withInts.mapPartitions { it =>
+    val rk = new RowKernel(df, Seq(inputCol, contCol), Seq(outCol -> DoubleType))
+    val inIdx = rk.idx(inputCol)
+    val cIdx = rk.idx(contCol)
+    rk.run { it =>
       val m = model.value
       val vocab = m.outDim
-      def ints(r: Row, idx: Int): Array[Int] =
-        if (r.isNullAt(idx)) null
-        else {
-          val xs = r.getSeq[Any](idx)
-          val a = new Array[Int](xs.length)
-          var j = 0
-          var ok = true
-          while (ok && j < a.length) {
-            xs(j) match {
-              case null => ok = false
-              case f: java.lang.Number => a(j) = f.intValue(); j += 1
-            }
-          }
-          if (ok) a else null
-        }
       it.grouped(bs).flatMap { rows =>
         rows.iterator.map { r =>
-          val p = ints(r, inIdx)
-          val c = ints(r, cIdx)
+          val p = promptIds(r, inIdx, allowEmpty = true)
+          val c = promptIds(r, cIdx, allowEmpty = true)
           if (p == null || p.isEmpty || c == null || c.isEmpty)
             Row.fromSeq(r.toSeq :+ null)
           else {
@@ -2530,7 +2327,7 @@ object Torch {
           }
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -2564,57 +2361,25 @@ object Torch {
       steps: Int,
       batchSize: Int = -1): DataFrame = {
     require(steps >= 1, "steps must be >= 1")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(model.value.inDim == -1,
       "generateGreedySharedPrefix needs a token-input model")
     require(!model.value.isCross, "cross-attention model not supported here")
     require(model.value.cacheable,
       "prefix sharing needs the KV-session path (cacheable model)")
-    val withInts = graft.Spread(df)
-      .withColumn(prefixCol, col(prefixCol).cast(ArrayType(IntegerType)))
-      .withColumn(inputCol, col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outCol, ArrayType(IntegerType), nullable = true))
-    val pIdx = withInts.schema.fieldIndex(prefixCol)
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    withInts.mapPartitions { it =>
+    val rk = new RowKernel(df, Seq(prefixCol, inputCol), Seq(outCol -> ArrayType(IntegerType)))
+    val pIdx = rk.idx(prefixCol)
+    val inIdx = rk.idx(inputCol)
+    rk.run { it =>
       val m = model.value
       val vocab = m.outDim
-      def ints(r: Row, idx: Int): Array[Int] =
-        if (r.isNullAt(idx)) null
-        else {
-          val xs = r.getSeq[Any](idx)
-          val a = new Array[Int](xs.length)
-          var j = 0
-          var ok = true
-          while (ok && j < a.length) {
-            xs(j) match {
-              case null => ok = false
-              case f: java.lang.Number => a(j) = f.intValue(); j += 1
-            }
-          }
-          if (ok) a else null
-        }
-      def argmaxFirst(out: Array[Float]): Int = {
-        var best = -1
-        var bv = Float.NaN
-        var j = 0
-        while (j < vocab) {
-          val v = out(j)
-          if (!v.isNaN && (best < 0 || v > bv)) { best = j; bv = v }
-          j += 1
-        }
-        require(best >= 0, "all-NaN logits")
-        best
-      }
       it.grouped(bs).flatMap { rows =>
         // one session per DISTINCT prefix in this batch; immutable
         // after open — every row forks it
         val cache = scala.collection.mutable.Map.empty[Vector[Int], m.DecodeSession]
         rows.iterator.map { r =>
-          val p = ints(r, pIdx)
-          val s = ints(r, inIdx)
+          val p = promptIds(r, pIdx, allowEmpty = true)
+          val s = promptIds(r, inIdx, allowEmpty = true)
           if (p == null || s == null || p.length + s.length == 0)
             Row.fromSeq(r.toSeq :+ null)
           else {
@@ -2628,19 +2393,12 @@ object Torch {
                 s.foreach(c.append)
                 c
               }
-            val gen = scala.collection.mutable.ArrayBuffer.empty[Int]
-            var t = 0
-            while (t < steps) {
-              val tid = argmaxFirst(child.logits())
-              gen += tid
-              child.append(tid)
-              t += 1
-            }
+            val gen = greedyLoop(child, steps)((c, _) => argmaxFirst(c.logits(), 0, vocab))
             Row.fromSeq(r.toSeq :+ gen.toSeq)
           }
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -2677,7 +2435,7 @@ object Torch {
     require(steps >= 1, "steps must be >= 1")
     require(lmWeight >= 0.0, "lmWeight must be >= 0")
     val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(model.value.inDim == -1, "generateGreedyFused needs a token-input model")
     require(!model.value.isCross, "cross-attention model not supported here")
     require(model.value.cacheable,
@@ -2691,12 +2449,9 @@ object Torch {
     // material even though the fixture vocab is 8
     val bcLm: Broadcast[(Array[Array[Long]], Array[Long])] =
       spark.sparkContext.broadcast((lmCounts, lmCounts.map(_.sum)))
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outCol, ArrayType(IntegerType), nullable = true))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    withInts.mapPartitions { it =>
+    val rk = new RowKernel(df, Seq(inputCol), Seq(outCol -> ArrayType(IntegerType)))
+    val inIdx = rk.idx(inputCol)
+    rk.run { it =>
       val m = model.value
       val vocab = m.outDim
       val (cnts, rsums) = bcLm.value
@@ -2719,39 +2474,17 @@ object Torch {
       }
       it.grouped(bs).flatMap { rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
+          val p: Array[Int] = promptIds(r, inIdx)
           if (p == null) Row.fromSeq(r.toSeq :+ null)
           else {
-            val sess = m.decodeSession(p)
-            var prev = p.last
-            val gen = scala.collection.mutable.ArrayBuffer.empty[Int]
-            var t = 0
-            while (t < steps) {
-              val tid = argmaxFused(sess.logits(), prev)
-              gen += tid
-              sess.append(tid)
-              prev = tid
-              t += 1
+            val gen = greedyLoop(m.decodeSession(p), steps) { (sess, g) =>
+              argmaxFused(sess.logits(), if (g.isEmpty) p.last else g.last)
             }
             Row.fromSeq(r.toSeq :+ gen.toSeq)
           }
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -2790,19 +2523,15 @@ object Torch {
     require(steps >= 1, "steps must be >= 1")
     require(topK >= 1, "topK must be >= 1")
     require(alpha >= 0.0 && alpha <= 1.0, "alpha must be in [0, 1]")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(model.value.inDim == -1, "generateContrastive needs a token-input model")
     require(!model.value.isCross, "cross-attention model not supported here")
     require(model.value.cacheable,
       "contrastive search needs the KV-session path (cacheable model)")
     require(topK <= model.value.outDim, "topK exceeds the vocabulary")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outCol, ArrayType(IntegerType), nullable = true))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    withInts.mapPartitions { it =>
+    val rk = new RowKernel(df, Seq(inputCol), Seq(outCol -> ArrayType(IntegerType)))
+    val inIdx = rk.idx(inputCol)
+    rk.run { it =>
       val m = model.value
       val vocab = m.outDim
       def q6(x: Double): Double =
@@ -2819,21 +2548,7 @@ object Torch {
       }
       it.grouped(bs).flatMap { rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
+          val p: Array[Int] = promptIds(r, inIdx)
           if (p == null) Row.fromSeq(r.toSeq :+ null)
           else {
             // token-at-a-time prompt ingest records EVERY position's
@@ -2882,7 +2597,7 @@ object Torch {
           }
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -2930,8 +2645,7 @@ object Torch {
       eosId: Int = -1,
       minNewTokens: Int = 0): DataFrame = {
     require(steps >= 1, "steps must be >= 1")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(model.value.isCross && model.value.cacheable,
       "generateGreedyPair needs a cacheable cross-attention model " +
         "(causal decoder self-attention + last-position pool)")
@@ -2939,70 +2653,33 @@ object Torch {
     require(minNewTokens >= 0, "minNewTokens must be >= 0")
     require(minNewTokens == 0 || eosId >= 0,
       "minNewTokens needs an eosId to suppress")
-    val withInts = graft.Spread(df)
-      .withColumn(queryCol, col(queryCol).cast(ArrayType(IntegerType)))
-      .withColumn(keyCol, col(keyCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outCol, ArrayType(IntegerType), nullable = true))
-    val qIdx = withInts.schema.fieldIndex(queryCol)
-    val kIdx = withInts.schema.fieldIndex(keyCol)
-    withInts.mapPartitions { it =>
+    val rk = new RowKernel(df, Seq(queryCol, keyCol), Seq(outCol -> ArrayType(IntegerType)))
+    val qIdx = rk.idx(queryCol)
+    val kIdx = rk.idx(keyCol)
+    rk.run { it =>
       val m = model.value
       val vocab = m.outDim
-      // genLen gates the min-new-tokens eos suppression: while fewer
-      // than minNewTokens tokens are generated, eos never becomes a
-      // candidate (minNewTokens = 0 makes the guard dead code — the
-      // un-floored path is byte-identical)
-      def argmaxFirst(l: Array[Float], genLen: Int): Int = {
-        var best = -1
-        var bv = Float.NaN
-        var j = 0
-        while (j < vocab) {
-          if (!(eosId >= 0 && j == eosId && genLen < minNewTokens) &&
-              !l(j).isNaN && (best < 0 || l(j) > bv)) { best = j; bv = l(j) }
-          j += 1
-        }
-        require(best >= 0, "all-NaN logits")
-        best
-      }
+      // the min-new-tokens floor: while fewer than minNewTokens tokens
+      // are generated, eos is banned (minNewTokens = 0 never bans it —
+      // the un-floored path is byte-identical)
+      val eosBan = if (eosId >= 0) Set(eosId) else Set.empty[Int]
       it.grouped(bs).flatMap { rows =>
-        def tokens(r: Row, idx: Int): Array[Int] = {
-          if (r.isNullAt(idx)) return null
-          val xs = r.getSeq[Any](idx)
-          if (xs.isEmpty) return null
-          val a = new Array[Int](xs.length)
-          var j = 0
-          while (j < a.length) {
-            xs(j) match {
-              case null => return null
-              case f: java.lang.Number => a(j) = f.intValue()
-            }
-            j += 1
-          }
-          a
-        }
         rows.iterator.map { r =>
-          val q0 = tokens(r, qIdx)
-          val k0 = tokens(r, kIdx)
+          val q0 = promptIds(r, qIdx)
+          val k0 = promptIds(r, kIdx)
           if (q0 == null || k0 == null) Row.fromSeq(r.toSeq :+ null)
           else {
-            val sess = m.decodeSession(q0, k0)
-            val gen = scala.collection.mutable.ArrayBuffer.empty[Int]
-            var t = 0
-            var stopped = false
-            while (t < steps && !stopped) {
-              val tid = argmaxFirst(sess.logits(), gen.length)
-              gen += tid
-              // eos stops the row (the eos itself is emitted; no
-              // further session work — the serving early-exit)
-              if (tid == eosId) stopped = true else sess.append(tid)
-              t += 1
+            // eos stops the row (the eos itself is emitted; no
+            // further session work — the serving early-exit)
+            val gen = greedyLoop(m.decodeSession(q0, k0), steps, eosId) { (sess, g) =>
+              argmaxFirst(sess.logits(), 0, vocab,
+                if (g.length < minNewTokens) eosBan else Set.empty)
             }
             Row.fromSeq(r.toSeq :+ gen.toSeq)
           }
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -3032,8 +2709,7 @@ object Torch {
       bannedPhrases: Seq[Seq[Int]] = Nil,
       minNewTokens: Int = 0): DataFrame = {
     require(steps >= 1 && width >= 1, "steps and width must be >= 1")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(model.value.isCross && model.value.cacheable,
       "beamSearchPair needs a cacheable cross-attention model")
     require(width <= model.value.outDim, "width exceeds the vocabulary")
@@ -3050,14 +2726,11 @@ object Torch {
       "minNewTokens needs an eosId to suppress")
     val plainKnobs = banned.isEmpty && repetitionPenalty == 1.0 &&
       noRepeatNgram == 0 && bannedPhrases.isEmpty && minNewTokens == 0
-    val withInts = graft.Spread(df)
-      .withColumn(queryCol, col(queryCol).cast(ArrayType(IntegerType)))
-      .withColumn(keyCol, col(keyCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outCol, ArrayType(ArrayType(IntegerType)), nullable = true))
-    val qIdx = withInts.schema.fieldIndex(queryCol)
-    val kIdx = withInts.schema.fieldIndex(keyCol)
-    withInts.mapPartitions { it =>
+    val rk = new RowKernel(df, Seq(queryCol, keyCol),
+      Seq(outCol -> ArrayType(ArrayType(IntegerType))))
+    val qIdx = rk.idx(queryCol)
+    val kIdx = rk.idx(keyCol)
+    rk.run { it =>
       val m = model.value
       val vocab = m.outDim
       def logProbs(out: Array[Float]): Array[Double] = {
@@ -3075,24 +2748,9 @@ object Torch {
         Array.tabulate(vocab)(k => out(k).toDouble - lse)
       }
       it.grouped(bs).flatMap { rows =>
-        def tokens(r: Row, idx: Int): Array[Int] = {
-          if (r.isNullAt(idx)) return null
-          val xs = r.getSeq[Any](idx)
-          if (xs.isEmpty) return null
-          val a = new Array[Int](xs.length)
-          var j = 0
-          while (j < a.length) {
-            xs(j) match {
-              case null => return null
-              case f: java.lang.Number => a(j) = f.intValue()
-            }
-            j += 1
-          }
-          a
-        }
         rows.iterator.map { r =>
-          val q0 = tokens(r, qIdx)
-          val k0 = tokens(r, kIdx)
+          val q0 = promptIds(r, qIdx)
+          val k0 = promptIds(r, kIdx)
           if (q0 == null || k0 == null) Row.fromSeq(r.toSeq :+ null)
           else {
             // (generated, RAW joint log-prob, session, done) — the
@@ -3146,7 +2804,7 @@ object Torch {
           }
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -3188,40 +2846,20 @@ object Torch {
     require(noRepeatNgram == 0 || noRepeatNgram >= 2,
       "noRepeatNgram must be 0 (off) or >= 2")
     require(minP >= 0.0 && minP <= 1.0, "minP must be in [0, 1]")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(model.value.isCross && model.value.cacheable,
       "generateSampledPair needs a cacheable cross-attention model")
-    val withInts = graft.Spread(df)
-      .withColumn(queryCol, col(queryCol).cast(ArrayType(IntegerType)))
-      .withColumn(keyCol, col(keyCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outCol, ArrayType(IntegerType), nullable = true))
-    val qIdx = withInts.schema.fieldIndex(queryCol)
-    val kIdx = withInts.schema.fieldIndex(keyCol)
-    val idIdx = withInts.schema.fieldIndex(idCol)
-    withInts.mapPartitions { it =>
+    val rk = new RowKernel(df, Seq(queryCol, keyCol), Seq(outCol -> ArrayType(IntegerType)))
+    val qIdx = rk.idx(queryCol)
+    val kIdx = rk.idx(keyCol)
+    val idIdx = rk.idx(idCol)
+    rk.run { it =>
       val m = model.value
       val vocab = m.outDim
       it.grouped(bs).flatMap { rows =>
-        def tokens(r: Row, idx: Int): Array[Int] = {
-          if (r.isNullAt(idx)) return null
-          val xs = r.getSeq[Any](idx)
-          if (xs.isEmpty) return null
-          val a = new Array[Int](xs.length)
-          var j = 0
-          while (j < a.length) {
-            xs(j) match {
-              case null => return null
-              case f: java.lang.Number => a(j) = f.intValue()
-            }
-            j += 1
-          }
-          a
-        }
         rows.iterator.map { r =>
-          val q0 = tokens(r, qIdx)
-          val k0 = tokens(r, kIdx)
+          val q0 = promptIds(r, qIdx)
+          val k0 = promptIds(r, kIdx)
           if (q0 == null || k0 == null || r.isNullAt(idIdx))
             Row.fromSeq(r.toSeq :+ null)
           else {
@@ -3259,7 +2897,7 @@ object Torch {
           }
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -3356,19 +2994,15 @@ object Torch {
     // belong to the other warper chain.
     require(typicalP >= 1.0 || (topK == Int.MaxValue && minP == 0.0),
       "typicalP composes with topP only (not topK/minP)")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(model.value.inDim == -1, "generateSampled needs a token-input model")
     require(!model.value.isCross,
       "cross-attention model: use generateGreedyPair")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outCol, ArrayType(IntegerType), nullable = true))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    val idIdx = withInts.schema.fieldIndex(idCol)
+    val rk = new RowKernel(df, Seq(inputCol), Seq(outCol -> ArrayType(IntegerType)))
+    val inIdx = rk.idx(inputCol)
+    val idIdx = rk.idx(idCol)
     val plain = repetitionPenalty == 1.0 && noRepeatNgram == 0
-    withInts.mapPartitions { it =>
+    rk.run { it =>
       val m = model.value
       val vocab = m.outDim
       def draw(id: Long, step: Int): Double = Sampling.draw(id, step)
@@ -3405,22 +3039,8 @@ object Torch {
           fuseRows = if (bcLm == null) null else bcLm.value._2)
       }
       it.grouped(bs).flatMap { rows =>
-        val seqs: Array[Array[Int]] = rows.map { r =>
-          if (r.isNullAt(inIdx) || r.isNullAt(idIdx)) null
-          else {
-            val xs = r.getSeq[Any](inIdx)
-            val a = new Array[Int](xs.length)
-            var j = 0
-            var ok = true
-            while (ok && j < a.length) {
-              xs(j) match {
-                case null => ok = false
-                case f: java.lang.Number => a(j) = f.intValue(); j += 1
-              }
-            }
-            if (ok && a.nonEmpty) a else null
-          }
-        }.toArray
+        val seqs: Array[Array[Int]] = rows.map(r =>
+          if (r.isNullAt(idIdx)) null else promptIds(r, inIdx)).toArray
         val ids: Array[Long] = rows.map(r =>
           if (r.isNullAt(idIdx)) 0L else r.getAs[Number](idIdx).longValue()).toArray
         val gen = Array.fill(seqs.length)(
@@ -3465,7 +3085,7 @@ object Torch {
           else Row.fromSeq(r.toSeq :+ gen(ri).toSeq)
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -3505,38 +3125,20 @@ object Torch {
     require(numReturnSequences >= 1, "numReturnSequences must be >= 1")
     require(temperature > 0.0, "temperature must be > 0 (greedy is generateGreedy)")
     require(topP > 0.0 && topP <= 1.0, "topP must be in (0, 1]")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(model.value.inDim == -1, "generateSampledK needs a token-input model")
     require(!model.value.isCross,
       "cross-attention model: use generateSampledPair")
     val k = numReturnSequences
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outCol, ArrayType(ArrayType(IntegerType)), nullable = true))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    val idIdx = withInts.schema.fieldIndex(idCol)
-    withInts.mapPartitions { it =>
+    val rk = new RowKernel(df, Seq(inputCol), Seq(outCol -> ArrayType(ArrayType(IntegerType))))
+    val inIdx = rk.idx(inputCol)
+    val idIdx = rk.idx(idCol)
+    rk.run { it =>
       val m = model.value
       val vocab = m.outDim
       it.grouped(bs).flatMap { rows =>
-        val seqs: Array[Array[Int]] = rows.map { r =>
-          if (r.isNullAt(inIdx) || r.isNullAt(idIdx)) null
-          else {
-            val xs = r.getSeq[Any](inIdx)
-            val a = new Array[Int](xs.length)
-            var j = 0
-            var ok = true
-            while (ok && j < a.length) {
-              xs(j) match {
-                case null => ok = false
-                case f: java.lang.Number => a(j) = f.intValue(); j += 1
-              }
-            }
-            if (ok && a.nonEmpty) a else null
-          }
-        }.toArray
+        val seqs: Array[Array[Int]] = rows.map(r =>
+          if (r.isNullAt(idIdx)) null else promptIds(r, inIdx)).toArray
         val ids: Array[Long] = rows.map(r =>
           if (r.isNullAt(idIdx)) 0L else r.getAs[Number](idIdx).longValue()).toArray
         val gen = Array.fill(seqs.length, k)(
@@ -3589,7 +3191,7 @@ object Torch {
           else Row.fromSeq(r.toSeq :+ gen(ri).toSeq.map(_.toSeq))
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /** Anti-degeneration decoding controls (Keskar et al. 2019's CTRL
@@ -3675,67 +3277,30 @@ object Torch {
     require(steps >= 1, "steps must be >= 1")
     require(nSink >= 0, "nSink must be >= 0")
     require(nWindow >= 1, "nWindow must be >= 1")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(model.value.inDim == -1,
       "generateGreedyWindowed needs a token-input model")
     require(!model.value.isCross, "cross-attention model not supported here")
     require(model.value.cacheable,
       "windowed decoding needs the KV-session path (cacheable model)")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outCol, ArrayType(IntegerType), nullable = true))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    withInts.mapPartitions { it =>
+    val rk = new RowKernel(df, Seq(inputCol), Seq(outCol -> ArrayType(IntegerType)))
+    val inIdx = rk.idx(inputCol)
+    rk.run { it =>
       val m = model.value
       val vocab = m.outDim
-      def argmaxFirst(out: Array[Float]): Int = {
-        var best = -1
-        var bv = Float.NaN
-        var j = 0
-        while (j < vocab) {
-          val v = out(j)
-          if (!v.isNaN && (best < 0 || v > bv)) { best = j; bv = v }
-          j += 1
-        }
-        require(best >= 0, "all-NaN logits")
-        best
-      }
       it.grouped(bs).flatMap { rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
+          val p: Array[Int] = promptIds(r, inIdx)
           if (p == null) Row.fromSeq(r.toSeq :+ null)
           else {
             val sess = if (relPos) m.decodeSessionRelPos(p, nSink, nWindow)
                        else m.decodeSessionWindowed(p, nSink, nWindow)
-            val gen = scala.collection.mutable.ArrayBuffer.empty[Int]
-            var t = 0
-            while (t < steps) {
-              val tok = argmaxFirst(sess.logits())
-              gen += tok
-              sess.append(tok)
-              t += 1
-            }
+            val gen = greedyLoop(sess, steps)((s, _) => argmaxFirst(s.logits(), 0, vocab))
             Row.fromSeq(r.toSeq :+ gen.toSeq)
           }
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -3780,8 +3345,7 @@ object Torch {
       "windows must be strictly ascending")
     require(windows.forall(_ >= 1), "every nWindow must be >= 1")
     require(divNum >= 0 && divDen >= 1, "divergence budget must be a fraction")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(model.value.inDim == -1, "autoKvWindow needs a token-input model")
     require(!model.value.isCross, "cross-attention model not supported here")
     require(model.value.cacheable,
@@ -3795,46 +3359,11 @@ object Torch {
     val pairs = withInts.mapPartitions { it =>
       val m = model.value
       val vocab = m.outDim
-      def argmaxFirst(out: Array[Float]): Int = {
-        var best = -1
-        var bv = Float.NaN
-        var j = 0
-        while (j < vocab) {
-          val v = out(j)
-          if (!v.isNaN && (best < 0 || v > bv)) { best = j; bv = v }
-          j += 1
-        }
-        require(best >= 0, "all-NaN logits")
-        best
-      }
-      def gens(sess: TorchScriptModel#DecodeSession): Array[Int] = {
-        val g = new Array[Int](steps)
-        var t = 0
-        while (t < steps) {
-          val tok = argmaxFirst(sess.logits())
-          g(t) = tok
-          sess.append(tok)
-          t += 1
-        }
-        g
-      }
+      def gens(sess: TorchScriptModel#DecodeSession): Array[Int] =
+        greedyLoop(sess, steps)((s, _) => argmaxFirst(s.logits(), 0, vocab))
       it.grouped(bs).flatMap { rows =>
         rows.iterator.flatMap { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(0)) null
-            else {
-              val xs = r.getSeq[Any](0)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
+          val p: Array[Int] = promptIds(r, 0)
           if (p == null) Iterator.empty
           else {
             val base = gens(m.decodeSession(p))
@@ -3909,8 +3438,7 @@ object Torch {
     require(forcedTokens.contains(0) ||
       (banned ++ beginSuppress).size < model.value.outDim,
       "beginSuppress + banned cover the whole vocabulary at step 0")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(model.value.inDim == -1, "generateGreedy needs a token-input model")
     require(!model.value.isCross,
       "cross-attention model: use generateGreedyPair")
@@ -3931,34 +3459,15 @@ object Torch {
         require(row.exists(_ != -1), s"DFA state $st allows no token")
       }
     }
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outCol, ArrayType(IntegerType), nullable = true))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
+    val rk = new RowKernel(df, Seq(inputCol), Seq(outCol -> ArrayType(IntegerType)))
+    val inIdx = rk.idx(inputCol)
     val plain = repetitionPenalty == 1.0 && noRepeatNgram == 0 &&
       eosId < 0 && dfaTrans == null && bannedPhrases.isEmpty &&
       minNewTokens == 0 && forcedTokens.isEmpty && beginSuppress.isEmpty &&
       watermarkDelta == 0.0
-    withInts.mapPartitions { it =>
+    rk.run { it =>
       val m = model.value
       val vocab = m.outDim
-      def argmaxFirst(out: Array[Float], off: Int): Int = {
-        var best = -1
-        var bv = Float.NaN
-        var j = 0
-        while (j < vocab) {
-          val v = out(off + j)
-          // NaN never wins; strict > keeps the FIRST max; banned ids
-          // are simply never candidates (constrained decoding)
-          if (!banned.contains(j) && !v.isNaN && (best < 0 || v > bv)) {
-            best = j; bv = v
-          }
-          j += 1
-        }
-        require(best >= 0, "all-NaN logits")
-        best
-      }
       // the knobbed pick: seen-token logits rescale in f64, n-gram
       // completions of the CURRENT (prompt + generated) sequence are
       // banned unless that would empty the vocabulary (then the ban
@@ -4030,22 +3539,7 @@ object Torch {
         best
       }
       it.grouped(bs).flatMap { rows =>
-        val seqs: Array[Array[Int]] = rows.map { r =>
-          if (r.isNullAt(inIdx)) null
-          else {
-            val xs = r.getSeq[Any](inIdx)
-            val a = new Array[Int](xs.length)
-            var j = 0
-            var ok = true
-            while (ok && j < a.length) {
-              xs(j) match {
-                case null => ok = false
-                case f: java.lang.Number => a(j) = f.intValue(); j += 1
-              }
-            }
-            if (ok && a.nonEmpty) a else null
-          }
-        }.toArray
+        val seqs: Array[Array[Int]] = rows.map(promptIds(_, inIdx)).toArray
         val gen = Array.fill(seqs.length)(
           scala.collection.mutable.ArrayBuffer.empty[Int])
         if (m.cacheable) {
@@ -4056,30 +3550,23 @@ object Torch {
           // doc), so trajectories and oracles are unchanged.
           seqs.zipWithIndex.foreach { case (s0, ri) =>
             if (s0 != null) {
-              val sess = m.decodeSession(s0)
               val full = scala.collection.mutable.ArrayBuffer.from(s0)
               var state = 0
-              var t = 0
-              var stopped = false
-              while (t < steps && !stopped) {
-                // a forced step emits without reading logits at all —
-                // the session still appends (the NEXT step's state
-                // needs the forced token's k/v like any other)
-                val tid = forcedTokens.get(gen(ri).length) match {
+              // a forced step emits without reading logits at all —
+              // the session still appends (the NEXT step's state needs
+              // the forced token's k/v like any other); `full` and the
+              // DFA state also advance past an eos, which ends the row
+              gen(ri) ++= greedyLoop(m.decodeSession(s0), steps, eosId) { (sess, g) =>
+                val tid = forcedTokens.get(g.length) match {
                   case Some(f) => f
                   case None =>
                     val lg = sess.logits()
-                    if (plain) argmaxFirst(lg, 0)
-                    else argmaxAdjusted(lg, 0, full, state, gen(ri).length)
+                    if (plain) argmaxFirst(lg, 0, vocab, banned)
+                    else argmaxAdjusted(lg, 0, full, state, g.length)
                 }
-                gen(ri) += tid
-                if (tid == eosId) stopped = true
-                else {
-                  sess.append(tid)
-                  if (!plain) full += tid
-                  if (dfaTrans != null) state = dfaTrans(state)(tid)
-                }
-                t += 1
+                if (!plain) full += tid
+                if (dfaTrans != null) state = dfaTrans(state)(tid)
+                tid
               }
             }
           }
@@ -4097,7 +3584,7 @@ object Torch {
                 val tid = forcedTokens.get(gen(ri).length) match {
                   case Some(f) => f
                   case None =>
-                    if (plain) argmaxFirst(out, k * vocab)
+                    if (plain) argmaxFirst(out, k * vocab, vocab, banned)
                     else argmaxAdjusted(out, k * vocab,
                       scala.collection.immutable.ArraySeq.unsafeWrapArray(cur(ri)),
                       states(ri), gen(ri).length)
@@ -4119,7 +3606,7 @@ object Torch {
           else Row.fromSeq(r.toSeq :+ gen(ri).toSeq)
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -4173,53 +3660,24 @@ object Torch {
       batchSize: Int = -1): DataFrame = {
     require(ngram >= 1, "ngram must be >= 1")
     require(maxDraft >= 1, "maxDraft must be >= 1")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(model.value.inDim == -1,
       "generatePromptLookup needs a token-input model")
     require(!model.value.isCross, "cross-attention model not supported here")
     require(model.value.cacheable,
       "prompt-lookup decoding needs the KV-session path (cacheable model)")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("draft_toks", ArrayType(IntegerType), nullable = true),
-      StructField("n_drafted", IntegerType, nullable = true),
-      StructField("n_accepted", IntegerType, nullable = true),
-      StructField("out_toks", ArrayType(IntegerType), nullable = true)))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    withInts.mapPartitions { it =>
+    val rk = new RowKernel(df, Seq(inputCol), Seq(
+      "draft_toks" -> ArrayType(IntegerType),
+      "n_drafted" -> IntegerType,
+      "n_accepted" -> IntegerType,
+      "out_toks" -> ArrayType(IntegerType)))
+    val inIdx = rk.idx(inputCol)
+    rk.run { it =>
       val m = model.value
       val vocab = m.outDim
-      def argmaxFirst(out: Array[Float]): Int = {
-        var best = -1
-        var bv = Float.NaN
-        var j = 0
-        while (j < vocab) {
-          val v = out(j)
-          if (!v.isNaN && (best < 0 || v > bv)) { best = j; bv = v }
-          j += 1
-        }
-        require(best >= 0, "all-NaN logits")
-        best
-      }
       it.grouped(bs).flatMap { rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
+          val p: Array[Int] = promptIds(r, inIdx)
           if (p == null) Row.fromSeq(r.toSeq ++ Seq(null, null, null, null))
           else {
             val drafts = lookupDraft(
@@ -4230,18 +3688,18 @@ object Torch {
             var n = 0
             var rejected = false
             while (n < drafts.length && !rejected) {
-              val t = argmaxFirst(sess.logits())
+              val t = argmaxFirst(sess.logits(), 0, vocab)
               out += t
               if (t == drafts(n)) { sess.append(t); n += 1 }
               else rejected = true // the argmax IS the correction
             }
-            if (!rejected) out += argmaxFirst(sess.logits()) // bonus
+            if (!rejected) out += argmaxFirst(sess.logits(), 0, vocab) // bonus
             Row.fromSeq(r.toSeq ++
               Seq(drafts.toSeq, drafts.length, n, out.toSeq))
           }
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -4273,8 +3731,7 @@ object Torch {
       batchSize: Int = -1): DataFrame = {
     require(numDrafts >= 1, "numDrafts must be >= 1")
     require(maxNewTokens >= 1, "maxNewTokens must be >= 1")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(target.value.inDim == -1 && draft.value.inDim == -1,
       "speculativeSampledMultiDraftLoop needs token-input models")
     require(!target.value.isCross && !draft.value.isCross,
@@ -4283,14 +3740,11 @@ object Torch {
       "draft and target must share the vocabulary")
     require(target.value.cacheable && draft.value.cacheable,
       "speculative sampling needs the KV-session path (cacheable models)")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("out_toks", ArrayType(IntegerType), nullable = true),
-      StructField("acc_rounds", ArrayType(IntegerType), nullable = true)))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    val idIdx = withInts.schema.fieldIndex(idCol)
-    withInts.mapPartitions { it =>
+    val rk = new RowKernel(df, Seq(inputCol),
+      Seq("out_toks" -> ArrayType(IntegerType), "acc_rounds" -> ArrayType(IntegerType)))
+    val inIdx = rk.idx(inputCol)
+    val idIdx = rk.idx(idCol)
+    rk.run { it =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
@@ -4300,21 +3754,7 @@ object Torch {
       def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
       it.grouped(bs).flatMap { rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx) || r.isNullAt(idIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
+          val p: Array[Int] = if (r.isNullAt(idIdx)) null else promptIds(r, inIdx)
           if (p == null) Row.fromSeq(r.toSeq ++ Seq(null, null))
           else {
             val id = r.getAs[Number](idIdx).longValue()
@@ -4341,7 +3781,7 @@ object Torch {
           }
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -4375,23 +3815,20 @@ object Torch {
       batchSize: Int = -1): DataFrame = {
     require(ngram >= 1, "ngram must be >= 1")
     require(maxDraft >= 1, "maxDraft must be >= 1")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(model.value.inDim == -1,
       "promptLookupSampled needs a token-input model")
     require(!model.value.isCross, "cross-attention model not supported here")
     require(model.value.cacheable,
       "prompt-lookup decoding needs the KV-session path (cacheable model)")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("draft_toks", ArrayType(IntegerType), nullable = true),
-      StructField("n_drafted", IntegerType, nullable = true),
-      StructField("n_accepted", IntegerType, nullable = true),
-      StructField("out_toks", ArrayType(IntegerType), nullable = true)))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    val idIdx = withInts.schema.fieldIndex(idCol)
-    withInts.mapPartitions { it =>
+    val rk = new RowKernel(df, Seq(inputCol), Seq(
+      "draft_toks" -> ArrayType(IntegerType),
+      "n_drafted" -> IntegerType,
+      "n_accepted" -> IntegerType,
+      "out_toks" -> ArrayType(IntegerType)))
+    val inIdx = rk.idx(inputCol)
+    val idIdx = rk.idx(idCol)
+    rk.run { it =>
       val m = model.value
       val vocab = m.outDim
       def q6(x: Double): Double = Spec.q6(x)
@@ -4400,21 +3837,7 @@ object Torch {
       def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
       it.grouped(bs).flatMap { rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx) || r.isNullAt(idIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
+          val p: Array[Int] = if (r.isNullAt(idIdx)) null else promptIds(r, inIdx)
           if (p == null) Row.fromSeq(r.toSeq ++ Seq(null, null, null, null))
           else {
             val id = r.getAs[Number](idIdx).longValue()
@@ -4448,7 +3871,7 @@ object Torch {
           }
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -4497,8 +3920,7 @@ object Torch {
     require(posteriorEps > 0.0 && posteriorEps <= 1.0,
       "posteriorEps must be in (0, 1]")
     require(posteriorAlpha > 0.0, "posteriorAlpha must be > 0")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(target.value.inDim == -1 && draft.value.inDim == -1,
       "treeDraftTypical needs token-input models")
     require(!target.value.isCross && !draft.value.isCross,
@@ -4508,31 +3930,17 @@ object Torch {
     require(branch <= target.value.outDim, "branch exceeds the vocabulary")
     require(target.value.cacheable && draft.value.cacheable,
       "tree-draft decoding needs the KV-session path (cacheable models)")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("tree", ArrayType(ArrayType(IntegerType)), nullable = true),
-      StructField("n_accepted", IntegerType, nullable = true),
-      StructField("out_toks", ArrayType(IntegerType), nullable = true)))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    withInts.mapPartitions { it =>
+    val rk = new RowKernel(df, Seq(inputCol), Seq(
+      "tree" -> ArrayType(ArrayType(IntegerType)),
+      "n_accepted" -> IntegerType,
+      "out_toks" -> ArrayType(IntegerType)))
+    val inIdx = rk.idx(inputCol)
+    rk.run { it =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
       def q6(x: Double): Double = Spec.q6(x)
       def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
-      def argmaxFirst(out: Array[Float]): Int = {
-        var best = -1
-        var bv = Float.NaN
-        var j = 0
-        while (j < vocab) {
-          val v = out(j)
-          if (!v.isNaN && (best < 0 || v > bv)) { best = j; bv = v }
-          j += 1
-        }
-        require(best >= 0, "all-NaN logits")
-        best
-      }
       def topBranch(lg: Array[Float]): Array[Int] = {
         val p6 = probs6(lg)
         (0 until vocab).sortBy(j => (-p6(j), j)).take(branch).toArray
@@ -4550,21 +3958,7 @@ object Torch {
       }
       it.grouped(bs).flatMap { rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
+          val p: Array[Int] = promptIds(r, inIdx)
           if (p == null) Row.fromSeq(r.toSeq ++ Seq(null, null, null))
           else {
             // the draft tree: treeDraftGreedy's BFS build verbatim
@@ -4609,12 +4003,12 @@ object Torch {
                 n += 1
               }
             }
-            out += argmaxFirst(st.logits()) // the deterministic continuation
+            out += argmaxFirst(st.logits(), 0, vocab) // the deterministic continuation
             Row.fromSeq(r.toSeq ++ Seq(tree.toSeq, n, out.toSeq))
           }
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -4662,8 +4056,7 @@ object Torch {
     val windowed = nWindow > 0
     require(!windowed || nSink >= 0,
       "a bounded-KV loop needs nSink >= 0 alongside nWindow >= 1")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(target.value.inDim == -1 && draft.value.inDim == -1,
       "treeDraftTypicalLoop needs token-input models")
     require(!target.value.isCross && !draft.value.isCross,
@@ -4673,31 +4066,17 @@ object Torch {
     require(branch <= target.value.outDim, "branch exceeds the vocabulary")
     require(target.value.cacheable && draft.value.cacheable,
       "tree-draft decoding needs the KV-session path (cacheable models)")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("out_toks", ArrayType(IntegerType), nullable = true),
-      StructField("n_cycles", IntegerType, nullable = true),
-      StructField("n_acc_total", IntegerType, nullable = true)))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    withInts.mapPartitions { it =>
+    val rk = new RowKernel(df, Seq(inputCol), Seq(
+      "out_toks" -> ArrayType(IntegerType),
+      "n_cycles" -> IntegerType,
+      "n_acc_total" -> IntegerType))
+    val inIdx = rk.idx(inputCol)
+    rk.run { it =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
       def q6(x: Double): Double = Spec.q6(x)
       def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
-      def argmaxFirst(out: Array[Float]): Int = {
-        var best = -1
-        var bv = Float.NaN
-        var j = 0
-        while (j < vocab) {
-          val v = out(j)
-          if (!v.isNaN && (best < 0 || v > bv)) { best = j; bv = v }
-          j += 1
-        }
-        require(best >= 0, "all-NaN logits")
-        best
-      }
       def topBranch(lg: Array[Float]): Array[Int] = {
         val p6 = probs6(lg)
         (0 until vocab).sortBy(j => (-p6(j), j)).take(branch).toArray
@@ -4716,21 +4095,7 @@ object Torch {
       }
       it.grouped(bs).flatMap { rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
+          val p: Array[Int] = promptIds(r, inIdx)
           if (p == null) Row.fromSeq(r.toSeq ++ Seq(null, null, null))
           else {
             val st = if (windowed) tm.decodeSessionWindowed(p, nSink, nWindow)
@@ -4783,14 +4148,14 @@ object Torch {
                   accTotal += 1
                 }
               }
-              emit(argmaxFirst(st.logits())) // the argmax continuation
+              emit(argmaxFirst(st.logits(), 0, vocab)) // the argmax continuation
             }
             Row.fromSeq(r.toSeq ++
               Seq(out.take(maxNewTokens).toSeq, cycles, accTotal))
           }
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -4840,8 +4205,7 @@ object Torch {
       "a bounded-KV loop needs nSink >= 0 alongside nWindow >= 1")
     require(!relPos || windowed,
       "relPos is a dial on the bounded-KV sessions (needs nWindow >= 1)")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(target.value.inDim == -1 && draft.value.inDim == -1,
       "treeDraftGreedyLoop needs token-input models")
     require(!target.value.isCross && !draft.value.isCross,
@@ -4851,50 +4215,22 @@ object Torch {
     require(branch <= target.value.outDim, "branch exceeds the vocabulary")
     require(target.value.cacheable && draft.value.cacheable,
       "tree-draft decoding needs the KV-session path (cacheable models)")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("out_toks", ArrayType(IntegerType), nullable = true),
-      StructField("n_cycles", IntegerType, nullable = true),
-      StructField("n_acc_total", IntegerType, nullable = true)))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    withInts.mapPartitions { it =>
+    val rk = new RowKernel(df, Seq(inputCol), Seq(
+      "out_toks" -> ArrayType(IntegerType),
+      "n_cycles" -> IntegerType,
+      "n_acc_total" -> IntegerType))
+    val inIdx = rk.idx(inputCol)
+    rk.run { it =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
-      def argmaxFirst(out: Array[Float]): Int = {
-        var best = -1
-        var bv = Float.NaN
-        var j = 0
-        while (j < vocab) {
-          val v = out(j)
-          if (!v.isNaN && (best < 0 || v > bv)) { best = j; bv = v }
-          j += 1
-        }
-        require(best >= 0, "all-NaN logits")
-        best
-      }
       def topBranch(lg: Array[Float]): Array[Int] = {
         val p6 = Spec.probs6(lg, vocab)
         (0 until vocab).sortBy(j => (-p6(j), j)).take(branch).toArray
       }
       it.grouped(bs).flatMap { rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
+          val p: Array[Int] = promptIds(r, inIdx)
           if (p == null) Row.fromSeq(r.toSeq ++ Seq(null, null, null))
           else {
             // the DRAFT session tracks the accepted prefix too — each
@@ -4941,20 +4277,20 @@ object Torch {
                 val nd = sd.fork(); nd.append(t); sd = nd
               }
               while (n < depth && !rejected) {
-                val t = argmaxFirst(st.logits())
+                val t = argmaxFirst(st.logits(), 0, vocab)
                 emit(t)
                 if (childrenOf(path).contains(t)) {
                   path :+= t; n += 1; accTotal += 1
                 } else rejected = true
               }
-              if (!rejected) emit(argmaxFirst(st.logits())) // bonus
+              if (!rejected) emit(argmaxFirst(st.logits(), 0, vocab)) // bonus
             }
             Row.fromSeq(r.toSeq ++
               Seq(out.take(maxNewTokens).toSeq, cycles, accTotal))
           }
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -4999,8 +4335,7 @@ object Torch {
       numDrafts: Int,
       batchSize: Int = -1): DataFrame = {
     require(numDrafts >= 1, "numDrafts must be >= 1")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(target.value.inDim == -1 && draft.value.inDim == -1,
       "speculativeSampledMultiDraft needs token-input models")
     require(!target.value.isCross && !draft.value.isCross,
@@ -5009,15 +4344,13 @@ object Torch {
       "draft and target must share the vocabulary")
     require(target.value.cacheable && draft.value.cacheable,
       "speculative sampling needs the KV-session path (cacheable models)")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("draft_toks", ArrayType(IntegerType), nullable = true),
-      StructField("acc_round", IntegerType, nullable = true),
-      StructField("final_tok", IntegerType, nullable = true)))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    val idIdx = withInts.schema.fieldIndex(idCol)
-    withInts.mapPartitions { it =>
+    val rk = new RowKernel(df, Seq(inputCol), Seq(
+      "draft_toks" -> ArrayType(IntegerType),
+      "acc_round" -> IntegerType,
+      "final_tok" -> IntegerType))
+    val inIdx = rk.idx(inputCol)
+    val idIdx = rk.idx(idCol)
+    rk.run { it =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
@@ -5029,21 +4362,7 @@ object Torch {
       // final pick walks the RAW masses — numDrafts = 1 IS q247)
       it.grouped(bs).flatMap { rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx) || r.isNullAt(idIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
+          val p: Array[Int] = if (r.isNullAt(idIdx)) null else promptIds(r, inIdx)
           if (p == null) Row.fromSeq(r.toSeq ++ Seq(null, null, null))
           else {
             val id = r.getAs[Number](idIdx).longValue()
@@ -5057,7 +4376,7 @@ object Torch {
           }
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -5114,8 +4433,7 @@ object Torch {
       batchSize: Int = -1): DataFrame = {
     require(branch >= 1, "branch must be >= 1")
     require(depth >= 1, "depth must be >= 1")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(target.value.inDim == -1 && draft.value.inDim == -1,
       "treeDraftStochastic needs token-input models")
     require(!target.value.isCross && !draft.value.isCross,
@@ -5124,16 +4442,14 @@ object Torch {
       "draft and target must share the vocabulary")
     require(target.value.cacheable && draft.value.cacheable,
       "tree-draft decoding needs the KV-session path (cacheable models)")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("tree", ArrayType(ArrayType(IntegerType)), nullable = true),
-      StructField("acc_rounds", ArrayType(IntegerType), nullable = true),
-      StructField("n_accepted", IntegerType, nullable = true),
-      StructField("out_toks", ArrayType(IntegerType), nullable = true)))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    val idIdx = withInts.schema.fieldIndex(idCol)
-    withInts.mapPartitions { it =>
+    val rk = new RowKernel(df, Seq(inputCol), Seq(
+      "tree" -> ArrayType(ArrayType(IntegerType)),
+      "acc_rounds" -> ArrayType(IntegerType),
+      "n_accepted" -> IntegerType,
+      "out_toks" -> ArrayType(IntegerType)))
+    val inIdx = rk.idx(inputCol)
+    val idIdx = rk.idx(idCol)
+    rk.run { it =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
@@ -5142,21 +4458,7 @@ object Torch {
       def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
       it.grouped(bs).flatMap { rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx) || r.isNullAt(idIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
+          val p: Array[Int] = if (r.isNullAt(idIdx)) null else promptIds(r, inIdx)
           if (p == null) Row.fromSeq(r.toSeq ++ Seq(null, null, null, null))
           else {
             val id = r.getAs[Number](idIdx).longValue()
@@ -5189,7 +4491,7 @@ object Torch {
           }
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -5239,8 +4541,7 @@ object Torch {
     val windowed = nWindow > 0
     require(!windowed || nSink >= 0,
       "a bounded-KV loop needs nSink >= 0 alongside nWindow >= 1")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(target.value.inDim == -1 && draft.value.inDim == -1,
       "treeDraftStochasticLoop needs token-input models")
     require(!target.value.isCross && !draft.value.isCross,
@@ -5249,15 +4550,13 @@ object Torch {
       "draft and target must share the vocabulary")
     require(target.value.cacheable && draft.value.cacheable,
       "tree-draft decoding needs the KV-session path (cacheable models)")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("out_toks", ArrayType(IntegerType), nullable = true),
-      StructField("n_cycles", IntegerType, nullable = true),
-      StructField("n_acc_total", IntegerType, nullable = true)))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    val idIdx = withInts.schema.fieldIndex(idCol)
-    withInts.mapPartitions { it =>
+    val rk = new RowKernel(df, Seq(inputCol), Seq(
+      "out_toks" -> ArrayType(IntegerType),
+      "n_cycles" -> IntegerType,
+      "n_acc_total" -> IntegerType))
+    val inIdx = rk.idx(inputCol)
+    val idIdx = rk.idx(idCol)
+    rk.run { it =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
@@ -5266,21 +4565,7 @@ object Torch {
       def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
       it.grouped(bs).flatMap { rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx) || r.isNullAt(idIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
+          val p: Array[Int] = if (r.isNullAt(idIdx)) null else promptIds(r, inIdx)
           if (p == null) Row.fromSeq(r.toSeq ++ Seq(null, null, null))
           else {
             val id = r.getAs[Number](idIdx).longValue()
@@ -5321,7 +4606,7 @@ object Torch {
           }
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -5506,52 +4791,23 @@ object Torch {
     val windowed = nWindow > 0
     require(!windowed || nSink >= 0,
       "a bounded-KV loop needs nSink >= 0 alongside nWindow >= 1")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(model.value.inDim == -1,
       "generatePromptLookupLoop needs a token-input model")
     require(!model.value.isCross, "cross-attention model not supported here")
     require(model.value.cacheable,
       "prompt-lookup decoding needs the KV-session path (cacheable model)")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("out_toks", ArrayType(IntegerType), nullable = true),
-      StructField("n_cycles", IntegerType, nullable = true),
-      StructField("n_acc_total", IntegerType, nullable = true)))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    withInts.mapPartitions { it =>
+    val rk = new RowKernel(df, Seq(inputCol), Seq(
+      "out_toks" -> ArrayType(IntegerType),
+      "n_cycles" -> IntegerType,
+      "n_acc_total" -> IntegerType))
+    val inIdx = rk.idx(inputCol)
+    rk.run { it =>
       val m = model.value
       val vocab = m.outDim
-      def argmaxFirst(out: Array[Float]): Int = {
-        var best = -1
-        var bv = Float.NaN
-        var j = 0
-        while (j < vocab) {
-          val v = out(j)
-          if (!v.isNaN && (best < 0 || v > bv)) { best = j; bv = v }
-          j += 1
-        }
-        require(best >= 0, "all-NaN logits")
-        best
-      }
       it.grouped(bs).flatMap { rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
+          val p: Array[Int] = promptIds(r, inIdx)
           if (p == null) Row.fromSeq(r.toSeq ++ Seq(null, null, null))
           else {
             val sess = if (relPos) m.decodeSessionRelPos(p, nSink, nWindow)
@@ -5567,13 +4823,13 @@ object Torch {
               var n = 0
               var rejected = false
               while (n < drafts.length && !rejected) {
-                val t = argmaxFirst(sess.logits())
+                val t = argmaxFirst(sess.logits(), 0, vocab)
                 out += t; sess.append(t); full += t
                 if (t == drafts(n)) { n += 1; accTotal += 1 }
                 else rejected = true // the argmax IS the correction
               }
               if (!rejected) { // no drafts, or all accepted → bonus
-                val t = argmaxFirst(sess.logits())
+                val t = argmaxFirst(sess.logits(), 0, vocab)
                 out += t; sess.append(t); full += t
               }
             }
@@ -5582,7 +4838,7 @@ object Torch {
           }
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -5636,8 +4892,7 @@ object Torch {
       batchSize: Int = -1): DataFrame = {
     require(branch >= 1, "branch must be >= 1")
     require(depth >= 1, "depth must be >= 1")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
+    val bs = batchOf(df, batchSize)
     require(target.value.inDim == -1 && draft.value.inDim == -1,
       "treeDraftGreedy needs token-input models")
     require(!target.value.isCross && !draft.value.isCross,
@@ -5647,50 +4902,22 @@ object Torch {
     require(branch <= target.value.outDim, "branch exceeds the vocabulary")
     require(target.value.cacheable && draft.value.cacheable,
       "tree-draft decoding needs the KV-session path (cacheable models)")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("tree", ArrayType(ArrayType(IntegerType)), nullable = true),
-      StructField("n_accepted", IntegerType, nullable = true),
-      StructField("out_toks", ArrayType(IntegerType), nullable = true)))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    withInts.mapPartitions { it =>
+    val rk = new RowKernel(df, Seq(inputCol), Seq(
+      "tree" -> ArrayType(ArrayType(IntegerType)),
+      "n_accepted" -> IntegerType,
+      "out_toks" -> ArrayType(IntegerType)))
+    val inIdx = rk.idx(inputCol)
+    rk.run { it =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
-      def argmaxFirst(out: Array[Float]): Int = {
-        var best = -1
-        var bv = Float.NaN
-        var j = 0
-        while (j < vocab) {
-          val v = out(j)
-          if (!v.isNaN && (best < 0 || v > bv)) { best = j; bv = v }
-          j += 1
-        }
-        require(best >= 0, "all-NaN logits")
-        best
-      }
       def topBranch(lg: Array[Float]): Array[Int] = {
         val p6 = Spec.probs6(lg, vocab)
         (0 until vocab).sortBy(j => (-p6(j), j)).take(branch).toArray
       }
       it.grouped(bs).flatMap { rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
+          val p: Array[Int] = promptIds(r, inIdx)
           if (p == null) Row.fromSeq(r.toSeq ++ Seq(null, null, null))
           else {
             // BFS tree build: each internal node costs one draft logit
@@ -5724,17 +4951,17 @@ object Torch {
             var n = 0
             var rejected = false
             while (n < depth && !rejected) {
-              val t = argmaxFirst(st.logits())
+              val t = argmaxFirst(st.logits(), 0, vocab)
               out += t
               if (childrenOf(path).contains(t)) {
                 st.append(t); path :+= t; n += 1
               } else rejected = true // the argmax IS the correction
             }
-            if (!rejected) out += argmaxFirst(st.logits()) // bonus
+            if (!rejected) out += argmaxFirst(st.logits(), 0, vocab) // bonus
             Row.fromSeq(r.toSeq ++ Seq(tree.toSeq, n, out.toSeq))
           }
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 }

@@ -2171,4 +2171,35 @@ class TorchGenerateSpec extends AnyFunSuite {
     assert(marked.exists { case (_, beams) =>
       beams.take(2) != beams.drop(2) }, "groups identical under bias")
   }
+
+  test("shared prompt reader: null array, null element, empty array, any integral element type") {
+    import org.apache.spark.sql.Row
+    assert(Torch.promptIds(Row(null), 0) == null)
+    assert(Torch.promptIds(Row(null), 0, allowEmpty = true) == null)
+    assert(Torch.promptIds(Row(Seq(1, null, 3)), 0) == null)
+    assert(Torch.promptIds(Row(Seq(1, null, 3)), 0, allowEmpty = true) == null)
+    assert(Torch.promptIds(Row(Seq.empty[Int]), 0) == null)
+    assert(Torch.promptIds(Row(Seq.empty[Int]), 0, allowEmpty = true).isEmpty)
+    assert(Torch.promptIds(Row("x", Seq(4L, 5L, 6L)), 1).toSeq == Seq(4, 5, 6))
+    assert(Torch.promptIds(Row(Seq(7.toShort, 8.toShort)), 0).toSeq == Seq(7, 8))
+    assert(Torch.promptIds(Row(Seq(9, 10)), 0, allowEmpty = true).toSeq == Seq(9, 10))
+  }
+
+  test("shared argmax: NaN skipped, first max wins ties, banned ids never picked, all-NaN throws") {
+    val n = Float.NaN
+    assert(Torch.argmaxFirst(Array(n, 1f, 3f, 2f), 0, 4) == 2)
+    assert(Torch.argmaxFirst(Array(3f, 1f, 3f, n), 0, 4) == 0)
+    assert(Torch.argmaxFirst(Array(n, 3f, 3f), 0, 3) == 1)
+    // the offset reads one row of a flat (rows, vocab) batch
+    assert(Torch.argmaxFirst(Array(9f, 0f, 1f, 2f, 2f), 2, 3) == 1)
+    assert(Torch.argmaxFirst(Array(1f, 5f, 5f, 4f), 0, 4, banned = Set(1)) == 2)
+    assert(Torch.argmaxFirst(Array(1f, 5f, 5f, 4f), 0, 4, banned = Set(1, 2)) == 3)
+    assert(Torch.argmaxFirst(Array(n, 5f, 2f), 0, 3, banned = Set(1)) == 2)
+    val allNaN = intercept[IllegalArgumentException](
+      Torch.argmaxFirst(Array(n, n, n), 0, 3))
+    assert(allNaN.getMessage.contains("all-NaN logits"))
+    val allBanned = intercept[IllegalArgumentException](
+      Torch.argmaxFirst(Array(n, 1f), 0, 2, banned = Set(1)))
+    assert(allBanned.getMessage.contains("all-NaN logits"))
+  }
 }
